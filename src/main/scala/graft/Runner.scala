@@ -168,7 +168,7 @@ object Runner {
       "oov_rate" -> (() => TextOps.oovRate(spark, sfDir).count()),
       // the tokenizer-freeze decision inputs, side by side: BPE vs
       // unigram fertility on the same corpus (first run trains/loads
-      // both SUCCESS-gated artifacts, so the chain materializes every
+      // both published artifacts, so the chain materializes every
       // tokenizer the pipeline can encode with)
       "tokenizer_fertility" -> (() =>
         ext.BpeOps.compressionRatio(spark, sfDir).count() +
@@ -253,33 +253,28 @@ object Runner {
     // retention bounds replay depth, deeper replays fail loudly).
     // SPARK_GRAFT_GC_KEEP overrides the default depth of 3.
     val gcKeep = sys.env.get("SPARK_GRAFT_GC_KEEP").map(_.toInt).getOrElse(3)
-    def gcCount(m: Map[String, Seq[Long]]): Long = {
-      m.foreach { case (tag, ids) =>
-        println(s"[runner] gc: feed '$tag' retired gens ${ids.mkString(",")}")
-      }
-      m.values.map(_.size.toLong).sum
-    }
+    // each family's base dir (evaluated only when its task runs) and
+    // the parts its generations are complete over
+    def gcFeeds(family: String, base: => String,
+                parts: Seq[String]): (String, () => Long) =
+      s"gc_${family}_feeds" -> (() => {
+        val retired = graft.io.Generations.gcAll(base, gcKeep,
+          graft.io.Artifacts.complete(_, parts))
+        retired.foreach { case (tag, ids) =>
+          println(s"[runner] gc: feed '$tag' retired gens ${ids.mkString(",")}")
+        }
+        retired.values.map(_.size.toLong).sum
+      })
     val maintenance: Seq[(String, () => Long)] = Seq(
-      "gc_lsh_feeds" -> (() => gcCount(graft.io.Generations.gcAll(
-        ext.DedupOps.lshIndexDir(sfDir), gcKeep,
-        dir => Seq("bands", "shingles", "sigs").forall(t =>
-          new java.io.File(s"$dir/$t/_SUCCESS").exists())))),
-      "gc_sha_feeds" -> (() => gcCount(graft.io.Generations.gcAll(
-        ext.LedgerOps.ledgerDir(sfDir), gcKeep,
-        dir => Seq("rows", "groups").forall(t =>
-          new java.io.File(s"$dir/$t/_SUCCESS").exists())))),
-      "gc_hll_feeds" -> (() => gcCount(graft.io.Generations.gcAll(
-        ext.SketchOps.hllBaseDir(sfDir), gcKeep,
-        dir => new java.io.File(s"$dir/_SUCCESS").exists()))),
-      "gc_pca_feeds" -> (() => gcCount(graft.io.Generations.gcAll(
-        ext.VectorOps.pcaBaseDir(sfDir), gcKeep,
-        dir => new java.io.File(s"$dir/_SUCCESS").exists()))),
-      "gc_hdr_feeds" -> (() => gcCount(graft.io.Generations.gcAll(
-        ext.SketchOps.hdrBaseDir(sfDir), gcKeep,
-        dir => new java.io.File(s"$dir/_SUCCESS").exists()))),
-      "gc_ivf_feeds" -> (() => gcCount(graft.io.Generations.gcAll(
-        ext.VectorOps.ivfFoldBaseDir(sfDir), gcKeep,
-        dir => new java.io.File(s"$dir/postings/_SUCCESS").exists()))))
+      gcFeeds("lsh", ext.DedupOps.lshIndexDir(sfDir),
+        ext.DedupOps.lshIndexParts),
+      gcFeeds("sha", ext.LedgerOps.ledgerDir(sfDir),
+        ext.LedgerOps.ledgerParts),
+      gcFeeds("hll", ext.SketchOps.hllBaseDir(sfDir), Nil),
+      gcFeeds("pca", ext.VectorOps.pcaBaseDir(sfDir), Nil),
+      gcFeeds("hdr", ext.SketchOps.hdrBaseDir(sfDir), Nil),
+      gcFeeds("ivf", ext.VectorOps.ivfFoldBaseDir(sfDir),
+        ext.VectorOps.ivfFoldParts))
 
     val tasks = chain match {
       case "daily" => daily

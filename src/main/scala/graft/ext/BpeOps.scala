@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.io.Fingerprint
+import graft.io.Artifacts
 import graft.ops.Canon
 
 /** Distributed BPE merge training — the tokenizer-construction step of a
@@ -215,52 +215,45 @@ object BpeOps {
     }
   }
 
-  /** Trained merges are a per-dataset artifact, like IVF centroids: the
-    * cache key folds in a source fingerprint so regenerated data cannot
-    * be served stale merges. The cached value is ≤ [[bpeMerges]] rows:
-    * (merge_idx, batch_round, a, b, ab, pair_freq).
+  private val bpeKind = "bpe_index"
+
+  /** Trained merges are a per-dataset artifact, like IVF centroids: a
+    * persisted, fingerprint-stamped table in the store (a NEW JVM
+    * reloads instead of retraining; BpePersistSpec pins reload ≡
+    * retrain) under the store's JVM memo, so regenerated data cannot
+    * be served stale merges. The value is ≤ [[bpeMerges]] rows:
+    * (merge_idx, batch_round, a, b, ab, pair_freq). `variant` names
+    * the vocabulary (char or byte merges over the same corpus).
     */
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, Int, String, String, String, Long)]]
+  private def memoMerges(spark: SparkSession, sfDir: String,
+                         variant: String)
+                        (train: => Seq[(Int, Int, String, String, String,
+                          Long)])
+      : Seq[(Int, Int, String, String, String, Long)] = {
+    import spark.implicits._
+    val dir = Artifacts.path(bpeKind, sfDir, "documents.parquet",
+      s"${variant}m${bpeMerges}_r${bpeRounds}_c$bpeCandidates") + "/merges"
+    Artifacts.memoized(bpeKind, dir) {
+      Artifacts.frame(spark, dir)(spark.createDataset(train)
+          .toDF("merge_idx", "batch_round", "a", "b", "ab", "pair_freq")
+          .coalesce(1))
+        .as[(Int, Int, String, String, String, Long)]
+        .collect().toSeq.sortBy(_._1)
+    }
+  }
 
   /** Memoized training. `words` lets a caller that ALREADY materialized
     * the word-frequency table (bpeEncode) share it on a cache miss —
     * training and encoding together still make one corpus-sized pass.
-    * Duplicate concurrent training of the same key is tolerated (it is
-    * deterministic; last write wins) rather than holding a map lock for
-    * the whole multi-job loop the way computeIfAbsent would.
     */
   private[ext] def trainedMerges(spark: SparkSession, sfDir: String,
                                  words: Option[DataFrame] = None)
-      : Seq[(Int, Int, String, String, String, Long)] = {
-    import spark.implicits._
-    val fp = Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val key = s"$sfDir#$bpeMerges#$bpeRounds#$bpeCandidates#$fp"
-    Option(mergeCache.get(key)).getOrElse {
-      // disk tier beneath the JVM memo: the trained tokenizer is a
-      // persisted, SUCCESS-gated, fingerprint-stamped artifact (the
-      // LSH/IVF index contract) — a NEW JVM reloads instead of
-      // retraining; BpePersistSpec pins reload ≡ retrain
-      val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-      val dir = s"${graft.io.Artifacts.root}/bpe_index/" +
-        s"${tag}_m${bpeMerges}_r${bpeRounds}_c${bpeCandidates}_$fp/merges"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val trained = trainLoop(spark,
-          words.getOrElse(tokenWords(spark, sfDir)))
-        spark.createDataset(trained)
-          .toDF("merge_idx", "batch_round", "a", "b", "ab", "pair_freq")
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-      }
-      val loaded = spark.read.parquet(dir)
-        .as[(Int, Int, String, String, String, Long)]
-        .collect().toSeq.sortBy(_._1)
-      mergeCache.put(key, loaded)
-      loaded
-    }
-  }
+      : Seq[(Int, Int, String, String, String, Long)] =
+    memoMerges(spark, sfDir, "")(
+      trainLoop(spark, words.getOrElse(tokenWords(spark, sfDir))))
 
   /** TEST HOOK: drop the JVM memo (simulated restart for BpePersistSpec). */
-  private[ext] def clearMemos(): Unit = mergeCache.clear()
+  private[ext] def clearMemos(): Unit = Artifacts.clearMemos(bpeKind)
 
   /** Adjacent-pair occurrences of a (w, sy, f) frame, one row per
     * occurrence weighted `sign`·f — the delta-stream form; the +1 case
@@ -368,36 +361,16 @@ object BpeOps {
   private[ext] def byteSymbols(w: Column): Column =
     regexp_extract_all(hex(w), lit(".."), lit(0))
 
-  /** [[trainedMerges]]' byte-arm twin: same memo + SUCCESS-gated disk
-    * tier, own artifact dir (byte and char merges are different
-    * vocabularies over the same corpus).
+  /** [[trainedMerges]]' byte-arm twin: same memo + disk tier, own
+    * artifact dir (byte and char merges are different vocabularies
+    * over the same corpus).
     */
   private[ext] def trainedByteMerges(spark: SparkSession, sfDir: String,
                                      words: Option[DataFrame] = None)
-      : Seq[(Int, Int, String, String, String, Long)] = {
-    import spark.implicits._
-    val fp = Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val key = s"bytes#$sfDir#$bpeMerges#$bpeRounds#$bpeCandidates#$fp"
-    Option(mergeCache.get(key)).getOrElse {
-      val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-      val dir = s"${graft.io.Artifacts.root}/bpe_index/" +
-        s"${tag}_bytes_m${bpeMerges}_r${bpeRounds}_c${bpeCandidates}_$fp" +
-        "/merges"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val trained = trainLoop(spark,
-          words.getOrElse(tokenWords(spark, sfDir)),
-          symbolize = byteSymbols)
-        spark.createDataset(trained)
-          .toDF("merge_idx", "batch_round", "a", "b", "ab", "pair_freq")
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-      }
-      val loaded = spark.read.parquet(dir)
-        .as[(Int, Int, String, String, String, Long)]
-        .collect().toSeq.sortBy(_._1)
-      mergeCache.put(key, loaded)
-      loaded
-    }
-  }
+      : Seq[(Int, Int, String, String, String, Long)] =
+    memoMerges(spark, sfDir, "bytes_")(
+      trainLoop(spark, words.getOrElse(tokenWords(spark, sfDir)),
+        symbolize = byteSymbols))
 
   /** BYTE-LEVEL BPE training — the fourth tokenizer arm: the same
     * batched-greedy trainer ([[trainLoop]]) run over UTF-8 byte atoms
@@ -465,9 +438,7 @@ object BpeOps {
       .select(explode(CurationOps.toksCol).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
 
-  private def lifecycleDone(dir: String): Boolean =
-    Seq("words", "merges").forall(t =>
-      new java.io.File(s"$dir/$t/_SUCCESS").exists())
+  private val lifecycleParts = Seq("words", "merges")
 
   /** The lifecycle's BASE corpus: even doc_ids. The odd half arrives
     * later as the merge batch, so base ∪ batch = the whole fixture —
@@ -491,34 +462,27 @@ object BpeOps {
   private def oddHalf(spark: SparkSession, sfDir: String): DataFrame =
     TextOps.documents(spark, sfDir).filter(col("doc_id") % 2 === 1)
 
-  private def lifecycleDir(sfDir: String): String = {
-    val fp = Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"${graft.io.Artifacts.root}/bpe_index/" +
-      s"${tag}_base2_m${bpeMerges}_r${bpeRounds}_c${bpeCandidates}_$fp"
-  }
+  private def lifecycleDir(sfDir: String): String =
+    Artifacts.path(bpeKind, sfDir, "documents.parquet",
+      s"base2_m${bpeMerges}_r${bpeRounds}_c$bpeCandidates")
 
   private def writeIndex(spark: SparkSession, dir: String,
                          words: DataFrame): Unit = {
     import spark.implicits._
-    words.write.mode("overwrite").parquet(s"$dir/words")
+    words.write.parquet(s"$dir/words")
     val persisted = spark.read.parquet(s"$dir/words")
     spark.createDataset(trainLoop(spark, persisted))
       .toDF("merge_idx", "batch_round", "a", "b", "ab", "pair_freq")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
+      .coalesce(1).write.parquet(s"$dir/merges")
   }
 
-  /** Build (or SUCCESS-gated reuse) the base-half BPE index: the word
-    * table AND the merges trained from it, both persisted — the word
-    * table is the merge/forget ledger, the merges are the artifact
-    * consumers read.
+  /** Build (or reuse) the base-half BPE index: the word table AND the
+    * merges trained from it, both persisted — the word table is the
+    * merge/forget ledger, the merges are the artifact consumers read.
     */
-  def bpeIndex(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir = lifecycleDir(sfDir)
-    if (!lifecycleDone(dir))
-      writeIndex(spark, dir, wordCounts(baseHalf(spark, sfDir)))
-    dir
-  }
+  def bpeIndex(spark: SparkSession, sfDir: String): String =
+    Artifacts.getOrBuild(lifecycleDir(sfDir), lifecycleParts)(
+      writeIndex(spark, _, wordCounts(baseHalf(spark, sfDir))))
 
   /** MERGE a document batch into a persisted BPE index: batch word
     * counts ADD to the stored word table (the base corpus is never
@@ -531,20 +495,13 @@ object BpeOps {
     * table, deterministic trainer — BpeLifecycleSpec pins it).
     */
   def bpeIndexMerge(spark: SparkSession, sfDir: String,
-                    batchDocs: DataFrame, batchTag: String): String =
-    synchronized {
-      require(batchTag.matches("[A-Za-z0-9_-]+"),
-        s"batchTag must be path-safe, got '$batchTag'")
-      val base = bpeIndex(spark, sfDir)
-      val dir = s"${base}_m_$batchTag"
-      if (!lifecycleDone(dir)) {
-        val merged = spark.read.parquet(s"$base/words")
-          .union(wordCounts(batchDocs))
-          .groupBy("w").agg(sum("f").as("f"))
-        writeIndex(spark, dir, merged)
-      }
-      dir
-    }
+                    batchDocs: DataFrame, batchTag: String): String = {
+    val base = bpeIndex(spark, sfDir)
+    Artifacts.derived(base, "m", batchTag, lifecycleParts)(
+      writeIndex(spark, _, spark.read.parquet(s"$base/words")
+        .union(wordCounts(batchDocs))
+        .groupBy("w").agg(sum("f").as("f"))))
+  }
 
   /** FORGET a document batch from a persisted BPE index: the forgotten
     * docs' word counts SUBTRACT from the stored ledger (zero rows
@@ -554,20 +511,12 @@ object BpeOps {
     */
   def bpeIndexForget(spark: SparkSession, baseDir: String,
                      forgetDocs: DataFrame, tag: String): String =
-    synchronized {
-      require(tag.matches("[A-Za-z0-9_-]+"),
-        s"tag must be path-safe, got '$tag'")
-      val dir = s"${baseDir}_f_$tag"
-      if (!lifecycleDone(dir)) {
-        val remaining = spark.read.parquet(s"$baseDir/words")
-          .union(wordCounts(forgetDocs)
-            .select(col("w"), (-col("f")).as("f")))
-          .groupBy("w").agg(sum("f").as("f"))
-          .filter(col("f") > 0)
-        writeIndex(spark, dir, remaining)
-      }
-      dir
-    }
+    Artifacts.derived(baseDir, "f", tag, lifecycleParts)(
+      writeIndex(spark, _, spark.read.parquet(s"$baseDir/words")
+        .union(wordCounts(forgetDocs)
+          .select(col("w"), (-col("f")).as("f")))
+        .groupBy("w").agg(sum("f").as("f"))
+        .filter(col("f") > 0)))
 
   /** The merge lifecycle as one query: base index on the even half,
     * MERGE the odd half in, report the retrained merges — which must

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.Tables
+import graft.io.{Artifacts, Generations, Tables}
 import graft.ops.Canon
 
 /** Near-duplicate detection over `documents` — the web-corpus dedup
@@ -149,13 +149,6 @@ object DedupOps {
       .select(col("doc_id") +: meta.map(col) :+
         graft.functions.ShingleHashes(col("norm"), shingleLen,
           distinct = true).as("sh"): _*)
-
-  /** The exploded (doc_id, s) form — the shape the MinHash signature
-    * aggregation consumes. Derive it from a persisted `shingleSets` frame
-    * so the hashing runs once.
-    */
-  def shingleTable(sets: DataFrame): DataFrame =
-    sets.select(col("doc_id"), explode(col("sh")).as("s"))
 
   /** Pair Jaccard over SORTED hashed-shingle sets: the intersection count
     * runs as the native allocation-free merge (the per-pair hash set of
@@ -818,13 +811,10 @@ object DedupOps {
     * pairs depend on goes into the path (the [[lshIndexDir]] rule): a
     * constant bump must MISS the old table, never read it.
     */
-  private def lshPairsDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    val params = s"h$numHashes-b$numBands-s$shingleLen-" +
-      s"j${(jaccardThreshold * 100).round}-c$maxBucketSize-v1"
-    s"${graft.io.Artifacts.root}/lsh_pairs/${tag}_${params}_$fp"
-  }
+  private def lshPairsDir(sfDir: String): String =
+    Artifacts.path("lsh_pairs", sfDir, "documents.parquet",
+      s"h$numHashes-b$numBands-s$shingleLen-" +
+        s"j${(jaccardThreshold * 100).round}-c$maxBucketSize-v1")
 
   /** The corpus's VERIFIED near-dup pair table as a persisted,
     * fingerprint-stamped artifact — the shared-tier form of
@@ -835,19 +825,19 @@ object DedupOps {
     * corpus-sized job you run once per corpus version, while the pair
     * table it emits is orders smaller (bounded by the band-bucket
     * caps), so probe-side consumers should never pay the build again.
-    * First call builds via [[minhashLsh]] and writes (SUCCESS-gated,
-    * deterministic — cached ≡ rebuilt bit-for-bit, which is why the
-    * consumers' standalone DuckDB oracles stay valid unchanged);
-    * subsequent calls read. [[graft.io.Artifacts.sharedTier]] off ⇒
-    * plain delegate to [[minhashLsh]] (every query standalone).
+    * First call builds via [[minhashLsh]] and publishes through the
+    * [[Artifacts]] store (deterministic — cached ≡ rebuilt
+    * bit-for-bit, which is why the consumers' standalone DuckDB
+    * oracles stay valid unchanged); subsequent calls read.
+    * [[Artifacts.sharedTier]] off ⇒ plain delegate to [[minhashLsh]]
+    * (every query standalone).
     */
   def lshPairs(spark: SparkSession, sfDir: String): DataFrame =
-    if (!graft.io.Artifacts.sharedTier) minhashLsh(spark, sfDir)
-    else synchronized {
-      val dir = lshPairsDir(sfDir)
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    if (!Artifacts.sharedTier) minhashLsh(spark, sfDir)
+    else {
+      val dir = Artifacts.getOrBuild(lshPairsDir(sfDir)) { tmp =>
         val built = minhashLsh(spark, sfDir) // materialized (cached)
-        built.write.mode("overwrite").parquet(dir)
+        built.write.parquet(tmp)
         built.unpersist(false)
       }
       Canon.materialized(
@@ -1384,24 +1374,14 @@ object DedupOps {
       .stripMargin
   }
 
-  /** Root for persisted LSH indexes (under [[graft.io.Artifacts.root]]
-    * — `target/` in the harness, env/sysprop-overridable for
-    * deployment). The tag folds in a file-listing fingerprint of the
-    * source so regenerated data can never be served a stale index
-    * (the same staleness contract as the IVF centroid cache).
+  /** Persisted LSH index dir (under [[Artifacts.root]]; the
+    * fingerprint of the source means regenerated data can never be
+    * served a stale index). v2 = the layout that added the sigs table
+    * for mergeability.
     */
-  private def lshIndexRoot = s"${graft.io.Artifacts.root}/lsh_index"
-
-  private[graft] def lshIndexDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    // every parameter the stored bands/shingles depend on goes into the
-    // path: a constant bump must MISS the old index, never probe it
-    // (v2 = the layout that added the sigs table for mergeability)
-    val params =
-      s"h$numHashes-b$numBands-s$shingleLen-p$incrementalCorpusPermille-v2"
-    s"$lshIndexRoot/${tag}_${params}_$fp"
-  }
+  private[graft] def lshIndexDir(sfDir: String): String =
+    Artifacts.path("lsh_index", sfDir, "documents.parquet",
+      s"h$numHashes-b$numBands-s$shingleLen-p$incrementalCorpusPermille-v2")
 
   /** (doc_id, band, bucket) rows derived from a signature table — the
     * probe side of the index, shared by build and merge so bucket
@@ -1413,9 +1393,8 @@ object DedupOps {
       .select(col("doc_id"), col("band"),
         bucketExpr(col("sig"), col("band")).as("bucket"))
 
-  private def indexDone(dir: String): Boolean =
-    Seq("bands", "shingles", "sigs").forall(t =>
-      new java.io.File(s"$dir/$t/_SUCCESS").exists())
+  /** The tables of an LSH index (and of each of its generations). */
+  private[graft] val lshIndexParts = Seq("bands", "shingles", "sigs")
 
   /** Read a stored index layout (bands, shingles, sigs) from `dir`. */
   def readLshIndex(spark: SparkSession, dir: String)
@@ -1424,39 +1403,36 @@ object DedupOps {
       spark.read.parquet(s"$dir/shingles"),
       spark.read.parquet(s"$dir/sigs"))
 
-  /** Builds (first call) or reuses (SUCCESS-gated) the PERSISTED corpus
-    * LSH index: `bands` (doc_id, band, bucket) and `shingles`
-    * (doc_id, sh — the exact-verify payload). This is the offline half
+  /** Builds (first call) or reuses the PERSISTED corpus LSH index:
+    * `bands` (doc_id, band, bucket) and `shingles` (doc_id, sh — the
+    * exact-verify payload). This is the offline half
     * of the ingest-time dedup lifecycle: the corpus's shingle → signature
     * → band work is paid once at index build, and every subsequent batch
     * probe reads these tables instead of re-deriving the corpus — the
     * same build-once/probe-many contract as the IVF centroid index.
     */
-  def lshIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
-    synchronized {
-      val dir = lshIndexDir(sfDir)
-      if (!indexDone(dir)) {
-        val corpus = documents(spark, sfDir)
-          .repartition(col("doc_id"))
-          .withColumn("norm", TextOps.normText(col("text")))
-          .filter(sideBucket(col("doc_id")) < incrementalCorpusPermille)
-        val sets = shingleSets(corpus).persist()
-        sets.select(col("doc_id"), col("sh"))
-          .write.mode("overwrite").parquet(s"$dir/shingles")
-        // sigs persist beside the bands: MinHash signatures are the
-        // MERGE algebra of the index (signature of a union = slot-wise
-        // min), so keeping them lets a later batch fold in without the
-        // corpus ever being re-shingled (lshIndexMerge)
-        sets.select(col("doc_id"),
-            graft.functions.MinHashSignature(col("sh")).as("sig"))
-          .write.mode("overwrite").parquet(s"$dir/sigs")
-        sets.unpersist(false)
-        bandsOfSigs(spark.read.parquet(s"$dir/sigs"))
-          .write.mode("overwrite").parquet(s"$dir/bands")
-      }
-      (spark.read.parquet(s"$dir/bands"),
-        spark.read.parquet(s"$dir/shingles"))
+  def lshIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val dir = Artifacts.getOrBuild(lshIndexDir(sfDir), lshIndexParts) { tmp =>
+      val corpus = documents(spark, sfDir)
+        .repartition(col("doc_id"))
+        .withColumn("norm", TextOps.normText(col("text")))
+        .filter(sideBucket(col("doc_id")) < incrementalCorpusPermille)
+      val sets = shingleSets(corpus).persist()
+      sets.select(col("doc_id"), col("sh")).write.parquet(s"$tmp/shingles")
+      // sigs persist beside the bands: MinHash signatures are the
+      // MERGE algebra of the index (signature of a union = slot-wise
+      // min), so keeping them lets a later batch fold in without the
+      // corpus ever being re-shingled (lshIndexMerge)
+      sets.select(col("doc_id"),
+          graft.functions.MinHashSignature(col("sh")).as("sig"))
+        .write.parquet(s"$tmp/sigs")
+      sets.unpersist(false)
+      bandsOfSigs(spark.read.parquet(s"$tmp/sigs"))
+        .write.parquet(s"$tmp/bands")
     }
+    (spark.read.parquet(s"$dir/bands"),
+      spark.read.parquet(s"$dir/shingles"))
+  }
 
   /** MERGE a batch into the persisted corpus index — the daily-crawl
     * maintenance path the rebuild-per-day cost model can't afford. The
@@ -1473,67 +1449,56 @@ object DedupOps {
     *    same bucket arithmetic as the build (shared bandsOfSigs), which
     *    leaves corpus-only rows bit-identical.
     *
-    * The result is written to a NEW stamped dir (`…_m_<batchTag>`,
-    * SUCCESS-gated like the build) so a crash mid-merge can never
+    * The result is published to a NEW stamped dir (`…_m_<batchTag>`,
+    * through the store like the build) so a crash mid-merge can never
     * corrupt the base index, and returns that dir for [[readLshIndex]] /
     * [[probeLshIndexTables]]. LshIndexMergeSpec proves merged ≡ rebuilt
     * tables and probe-result equality, plus mtime evidence the base
     * index was only read.
     */
   def lshIndexMerge(spark: SparkSession, sfDir: String,
-                    batchDocs: DataFrame, batchTag: String): String =
-    synchronized {
-      lshIndex(spark, sfDir) // ensure the base index exists
-      lshIndexMergeInto(spark, lshIndexDir(sfDir), batchDocs, batchTag)
-    }
+                    batchDocs: DataFrame, batchTag: String): String = {
+    lshIndex(spark, sfDir) // ensure the base index exists
+    lshIndexMergeInto(spark, lshIndexDir(sfDir), batchDocs, batchTag)
+  }
 
   /** The merge core against an EXPLICIT base-index dir — what
     * [[lshIndexMerge]] runs against the fixture's base, exposed so
     * lifecycle compositions (notably forget-then-remerge, the retract-
     * one-version recipe [[lshIndexForget]] documents) can merge onto a
-    * derived `…_f_` / `…_m_` index too. Same stamped-output and
-    * SUCCESS-gating contract.
+    * derived `…_f_` / `…_m_` index too. Same stamped-output contract.
     */
   def lshIndexMergeInto(spark: SparkSession, baseDir: String,
                         batchDocs: DataFrame, batchTag: String): String =
-    synchronized {
-      require(batchTag.matches("[A-Za-z0-9_-]+"),
-        s"batchTag must be path-safe, got '$batchTag'")
-      val dir = s"${baseDir}_m_$batchTag"
-      lshIndexMergeCore(spark, baseDir, dir, batchDocs)
-      dir
-    }
+    Artifacts.derived(baseDir, "m", batchTag, lshIndexParts)(
+      lshIndexMergeCore(spark, baseDir, _, batchDocs))
 
-  /** The merge body against an EXPLICIT output dir — shared by the
+  /** The merge body writing into an EXPLICIT dir — shared by the
     * stamped-name merge above and the admission fold's flat
-    * per-generation dirs ([[lshAdmit]]), SUCCESS-gated either way so a
-    * replay is skipped, never re-applied.
+    * per-generation dirs ([[lshAdmit]]).
     */
   private def lshIndexMergeCore(spark: SparkSession, baseDir: String,
                                 outDir: String,
-                                batchDocs: DataFrame): Unit =
-    synchronized {
-      if (!indexDone(outDir)) {
-        val (_, baseSh, baseSigs) = readLshIndex(spark, baseDir)
-        val withNorm = batchDocs.select(col("doc_id"), col("text"))
-          .repartition(col("doc_id"))
-          .withColumn("norm", TextOps.normText(col("text")))
-        val bSets = shingleSets(withNorm).persist()
-        val bSigs = bSets.select(col("doc_id"),
-          graft.functions.MinHashSignature(col("sh")).as("sig"))
-        baseSigs.union(bSigs).groupBy("doc_id")
-          .agg(graft.functions.SignatureMin.column(col("sig")).as("sig"))
-          .write.mode("overwrite").parquet(s"$outDir/sigs")
-        baseSh.union(bSets.select(col("doc_id"), col("sh")))
-          .groupBy("doc_id")
-          .agg(array_sort(array_distinct(flatten(collect_list(col("sh")))))
-            .as("sh"))
-          .write.mode("overwrite").parquet(s"$outDir/shingles")
-        bSets.unpersist(false)
-        bandsOfSigs(spark.read.parquet(s"$outDir/sigs"))
-          .write.mode("overwrite").parquet(s"$outDir/bands")
-      }
-    }
+                                batchDocs: DataFrame): Unit = {
+    val (_, baseSh, baseSigs) = readLshIndex(spark, baseDir)
+    val withNorm = batchDocs.select(col("doc_id"), col("text"))
+      .repartition(col("doc_id"))
+      .withColumn("norm", TextOps.normText(col("text")))
+    val bSets = shingleSets(withNorm).persist()
+    val bSigs = bSets.select(col("doc_id"),
+      graft.functions.MinHashSignature(col("sh")).as("sig"))
+    baseSigs.union(bSigs).groupBy("doc_id")
+      .agg(graft.functions.SignatureMin.column(col("sig")).as("sig"))
+      .write.parquet(s"$outDir/sigs")
+    baseSh.union(bSets.select(col("doc_id"), col("sh")))
+      .groupBy("doc_id")
+      .agg(array_sort(array_distinct(flatten(collect_list(col("sh")))))
+        .as("sh"))
+      .write.parquet(s"$outDir/shingles")
+    bSets.unpersist(false)
+    bandsOfSigs(spark.read.parquet(s"$outDir/sigs"))
+      .write.parquet(s"$outDir/bands")
+  }
 
   /** FORGET a set of doc_ids from a persisted index — delete
     * propagation into the derived artifact (the right-to-be-forgotten
@@ -1542,8 +1507,8 @@ object DedupOps {
     * state (signatures, shingle payloads, band rows are all functions
     * of one doc), so an anti-join filter IS a from-scratch rebuild
     * without those docs — which is why [[minhashLshForgotten]] can
-    * share the incremental oracle family. Writes a NEW stamped
-    * `…_f_<tag>` dir, SUCCESS-gated; the base index is only read.
+    * share the incremental oracle family. Publishes a NEW stamped
+    * `…_f_<tag>` dir; the base index is only read.
     *
     * SEMANTICS / PRECONDITION: forget removes a DOCUMENT — every
     * version of it. If a doc_id was re-crawled and [[lshIndexMerge]]d,
@@ -1561,19 +1526,13 @@ object DedupOps {
     */
   def lshIndexForget(spark: SparkSession, baseDir: String,
                      forgetIds: DataFrame, tag: String): String =
-    synchronized {
-      require(tag.matches("[A-Za-z0-9_-]+"),
-        s"tag must be path-safe, got '$tag'")
-      val dir = s"${baseDir}_f_$tag"
-      if (!indexDone(dir)) {
-        val ids = forgetIds.select("doc_id")
-        Seq("sigs", "shingles", "bands").foreach { t =>
-          spark.read.parquet(s"$baseDir/$t")
-            .join(broadcast(ids), Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$dir/$t")
-        }
+    Artifacts.derived(baseDir, "f", tag, lshIndexParts) { tmp =>
+      val ids = forgetIds.select("doc_id")
+      Seq("sigs", "shingles", "bands").foreach { t =>
+        spark.read.parquet(s"$baseDir/$t")
+          .join(broadcast(ids), Seq("doc_id"), "left_anti")
+          .write.parquet(s"$tmp/$t")
       }
-      dir
     }
 
   /** The full index lifecycle ROUND TRIP as one query: build the base
@@ -1777,22 +1736,6 @@ object DedupOps {
         .select("id_a", "id_b", "jaccard")))
   }
 
-  /** Flat per-generation dir of an admission feed (the
-    * [[graft.ext.LedgerOps]] feedGenDir discipline: a pure function of
-    * (feedTag, batchId), constant path length over an unbounded feed).
-    */
-  private[ext] def lshFeedGenDir(baseDir: String, feedTag: String)
-                                (batchId: Long): String =
-    s"${baseDir}__feed_$feedTag/g$batchId"
-
-  /** Retire old LSH admission generations ([[graft.io.Generations]]
-    * retention contract; completeness = the index's own three-table
-    * SUCCESS gate).
-    */
-  def lshFeedGc(sfDir: String, feedTag: String, keepLast: Int): Seq[Long] =
-    graft.io.Generations.gc(lshIndexDir(sfDir), feedTag, keepLast,
-      indexDone)
-
   /** Ingest-time NEAR-dup ADMISSION step — the LSH analogue of
     * [[graft.ext.LedgerOps.shaLedgerAdmit]], completing the admission
     * pair (exact + near) the way the batch ledger completes it beside
@@ -1812,26 +1755,31 @@ object DedupOps {
     * represented. `dup_of` points at the corpus keeper (min corpus id
     * over its verified pairs), else the cluster minimum, else −1.
     *
-    * Replay-safe exactly as the SHA fold: batch ids are checkpointed,
-    * each generation is a flat SUCCESS-gated dir keyed by (feedTag,
-    * batchId), probes read immutable prior dirs, and only ADMITTED
-    * docs merge forward — so a crash between probe, merge and sink
-    * replays to byte-identical verdicts. The bucket-cap census stays
+    * Replay-safe exactly as the SHA fold (one [[Generations.step]]):
+    * probes read immutable prior generations and only ADMITTED docs
+    * merge forward — so a crash between probe, merge and sink replays
+    * to byte-identical verdicts. The bucket-cap census stays
     * on the index side ([[probeLshIndexTables]]), so per-batch ≡
     * whole-feed censusing holds unconditionally.
     */
   def lshAdmit(spark: SparkSession, sfDir: String, feedTag: String,
                batch: DataFrame, batchId: Long): DataFrame = {
-    require(feedTag.matches("[A-Za-z0-9_-]+"),
-      s"feedTag must be path-safe, got '$feedTag'")
     lshIndex(spark, sfDir) // ensure the base index exists
-    val base = lshIndexDir(sfDir)
-    val gen = lshFeedGenDir(base, feedTag) _
-    val prev = if (batchId == 0L) base else gen(batchId - 1)
-    require(indexDone(prev),
-      s"index chain broken before batch $batchId: $prev incomplete")
     val b = batch.select(col("doc_id"), col("text")).persist()
     b.count()
+    val (out, _) = Generations.step(lshIndexDir(sfDir), lshIndexParts,
+        feedTag, batchId)(admitVerdicts(spark, _, b)) { (verdicts, prev, tmp) =>
+      val admittedDocs = b.join(
+        verdicts.filter(col("admitted")).select("doc_id"), Seq("doc_id"))
+      lshIndexMergeCore(spark, prev, tmp, admittedDocs)
+    }
+    b.unpersist(false)
+    out
+  }
+
+  /** [[lshAdmit]]'s verdicts for batch `b` against index `prev`. */
+  private def admitVerdicts(spark: SparkSession, prev: String,
+                            b: DataFrame): DataFrame = {
     val (pBands, pSh, _) = readLshIndex(spark, prev)
     val idxPairs = probeLshIndexTables(spark, pBands, pSh, b)
     val idxHit = idxPairs.groupBy("batch_id")
@@ -1854,12 +1802,7 @@ object DedupOps {
           when(col("doc_id") =!= col("batch_rep"), col("batch_rep")),
           lit(-1L)))
       .select("doc_id", "admitted", "reason", "dup_of")
-    val out = Canon.materialized(Canon.canonicalize(verdicts), idxPairs)
-    val admittedDocs = b.join(
-      out.filter(col("admitted")).select("doc_id"), Seq("doc_id"))
-    lshIndexMergeCore(spark, prev, gen(batchId), admittedDocs)
-    b.unpersist(false)
-    out
+    Canon.materialized(Canon.canonicalize(verdicts), idxPairs)
   }
 
   // ---- LSH recall telemetry -------------------------------------------
@@ -2187,16 +2130,13 @@ object DedupOps {
         .select("lang", "id_a", "id_b", "hamming")))
   }
 
-  private def simhashPairsDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    val params = s"hm$simhashMaxHamming-c$simhashMaxChunkBucket-v1"
-    s"${graft.io.Artifacts.root}/simhash_pairs/${tag}_${params}_$fp"
-  }
+  private def simhashPairsDir(sfDir: String): String =
+    Artifacts.path("simhash_pairs", sfDir, "documents.parquet",
+      s"hm$simhashMaxHamming-c$simhashMaxChunkBucket-v1")
 
   /** The corpus's verified SIMHASH pair table as a persisted,
     * fingerprint-stamped artifact — [[lshPairs]]' contract applied to
-    * the Hamming family (same SUCCESS gate, same kill switch, same
+    * the Hamming family (same store publish, same kill switch, same
     * cached ≡ rebuilt bit-determinism, so consumers' standalone
     * oracles stay valid unchanged). [[simhashNearDup]] stays the
     * designated builder query; the recall telemetry reads this tier
@@ -2204,12 +2144,11 @@ object DedupOps {
     * it measures the banding of.
     */
   def simhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    if (!graft.io.Artifacts.sharedTier) simhashNearDup(spark, sfDir)
-    else synchronized {
-      val dir = simhashPairsDir(sfDir)
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    if (!Artifacts.sharedTier) simhashNearDup(spark, sfDir)
+    else {
+      val dir = Artifacts.getOrBuild(simhashPairsDir(sfDir)) { tmp =>
         val built = simhashNearDup(spark, sfDir) // materialized (cached)
-        built.write.mode("overwrite").parquet(dir)
+        built.write.parquet(tmp)
         built.unpersist(false)
       }
       Canon.materialized(

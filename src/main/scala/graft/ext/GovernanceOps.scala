@@ -12,7 +12,7 @@ import graft.ops.Canon
   * forget must propagate to EVERY persisted derived artifact — the
   * exact-dup ledger, the near-dup index, the reference LM, both
   * tokenizer word ledgers, and the ANN index — not just the corpus
-  * table. Each family already owns an exact, SUCCESS-gated,
+  * table. Each family already owns an exact, store-published,
   * spec-pinned forget (delete-propagation semantics documented at the
   * family: anti-join for doc-keyed tiers, subtractive counts for the
   * ledgers, whole-document semantics for the lossy slot-min fold);
@@ -39,8 +39,9 @@ import graft.ops.Canon
   * anti-join or one subtractive count-merge over its own artifact,
   * all batch-sized in the forget set; nothing here adds corpus-scaled
   * work. Idempotent by construction: every family's `…_f_<tag>` dir
-  * is SUCCESS-gated, so a replayed sweep (crash recovery, retried
-  * orchestration) re-reads instead of re-applying.
+  * is published through [[graft.io.Artifacts]], so a replayed sweep
+  * (crash recovery, retried orchestration) re-reads instead of
+  * re-applying.
   *
   * `forgetDocs` must carry (doc_id, text, lang): the count-ledger
   * tiers subtract the departed documents' OWN counts, which requires

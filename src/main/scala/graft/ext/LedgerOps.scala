@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.{Artifacts, Generations}
 import graft.ops.Canon
 
 /** Persisted EXACT-dedup hash ledger with the full artifact lifecycle
@@ -17,7 +18,8 @@ import graft.ops.Canon
   * IVF and BPE-ledger artifacts. This file gives EXACT dedup the same
   * symmetry.
   *
-  * Two SUCCESS-gated parquet tables under a fingerprint-stamped dir:
+  * Two parquet tables under a fingerprint-stamped dir, published as
+  * one [[Artifacts]] unit:
   *
   *  - `rows`   — (text_sha, doc_id), one row per corpus document; the
   *    exact-algebra half. Merge is set union, forget is anti join —
@@ -42,20 +44,12 @@ import graft.ops.Canon
   */
 object LedgerOps {
 
-  private def ledgerRootDir = s"${graft.io.Artifacts.root}/sha_ledger"
+  /** Stamped base-ledger dir: a data change misses the old artifact. */
+  private[graft] def ledgerDir(sfDir: String): String =
+    Artifacts.path("sha_ledger", sfDir, "documents.parquet")
 
-  /** Stamped base-ledger dir: fixture fingerprint + slice params, so a
-    * data or parameter change misses the old artifact.
-    */
-  private[graft] def ledgerDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"$ledgerRootDir/${tag}_$fp"
-  }
-
-  private def done(dir: String): Boolean =
-    Seq("rows", "groups").forall(t =>
-      new java.io.File(s"$dir/$t/_SUCCESS").exists())
+  /** The tables of a ledger (and of each of its generations). */
+  private[graft] val ledgerParts = Seq("rows", "groups")
 
   /** Content hash at the ledger boundary: sha-256 of the normalized
     * text — the [[TextOps.dedupExact]] definition, shared verbatim.
@@ -90,12 +84,10 @@ object LedgerOps {
       .filter(col("doc_id") % 10 === 0)
       .select("doc_id", "text")
 
-  /** Build (first call) or reuse (SUCCESS-gated) the base ledger. */
+  /** Build (first call) or reuse the base ledger. */
   def shaLedger(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val dir = ledgerDir(sfDir)
-      if (!done(dir)) buildInto(spark, dir, baseDocs(spark, sfDir))
-      dir
+    Artifacts.getOrBuild(ledgerDir(sfDir), ledgerParts) { tmp =>
+      buildInto(spark, tmp, baseDocs(spark, sfDir)); ()
     }
 
   /** From-scratch build over an explicit doc frame — the definition
@@ -127,56 +119,48 @@ object LedgerOps {
     */
   def shaLedgerMerge(spark: SparkSession, baseDir: String,
                      batchDocs: DataFrame, batchTag: String): String =
-    synchronized {
-      require(batchTag.matches("[A-Za-z0-9_-]+"),
-        s"batchTag must be path-safe, got '$batchTag'")
-      mergeInto(spark, baseDir, s"${baseDir}_m_$batchTag", batchDocs)
-    }
+    Artifacts.derived(baseDir, "m", batchTag, ledgerParts)(
+      mergeInto(spark, baseDir, _, batchDocs))
 
-  /** Merge body with an explicit target dir (SUCCESS-gated) — the
-    * admission chain names generations flatly, so it cannot reuse
-    * [[shaLedgerMerge]]'s append-to-the-name convention.
+  /** Merge body writing into an explicit dir — the admission chain
+    * names generations flatly, so it cannot reuse [[shaLedgerMerge]]'s
+    * append-to-the-name convention.
     */
   private def mergeInto(spark: SparkSession, baseDir: String,
-                        dir: String, batchDocs: DataFrame): String = {
-      if (!done(dir)) {
-        val baseRows = readRows(spark, baseDir)
-        val baseGroups = readGroups(spark, baseDir)
-        val bRows = rowsOf(batchDocs).persist()
-        bRows.count()
-        // rows already in the base (re-crawled identical versions):
-        // corpus SCAN + broadcast semi probe -> tiny frame
-        val overlap = baseRows.join(broadcast(bRows),
-          Seq("text_sha", "doc_id"), "leftsemi").persist()
-        overlap.count()
-        val fresh = bRows.join(broadcast(overlap),
-          Seq("text_sha", "doc_id"), "leftanti").persist()
-        fresh.count()
-        baseRows.union(fresh)
-          .write.mode("overwrite").parquet(s"$dir/rows")
-        // groups: pass untouched shas through; recombine touched ones
-        val touched = groupsOf(fresh)
-          .withColumnRenamed("keep_doc_id", "b_keep")
-          .withColumnRenamed("n_copies", "b_n")
-        val inBoth = baseGroups.join(broadcast(touched), Seq("text_sha"))
-          .select(col("text_sha"),
-            least(col("keep_doc_id"), col("b_keep")).as("keep_doc_id"),
-            (col("n_copies") + col("b_n")).as("n_copies"))
-          .persist()
-        inBoth.count()
-        val newShas = touched
-          .join(broadcast(inBoth.select("text_sha")), Seq("text_sha"),
-            "leftanti")
-          .select(col("text_sha"), col("b_keep").as("keep_doc_id"),
-            col("b_n").as("n_copies"))
-        val pass = baseGroups.join(broadcast(touched.select("text_sha")),
-          Seq("text_sha"), "leftanti")
-        pass.union(inBoth).union(newShas)
-          .write.mode("overwrite").parquet(s"$dir/groups")
-        Seq(bRows, overlap, fresh, inBoth).foreach(_.unpersist(false))
-      }
-      dir
-    }
+                        dir: String, batchDocs: DataFrame): Unit = {
+    val baseRows = readRows(spark, baseDir)
+    val baseGroups = readGroups(spark, baseDir)
+    val bRows = rowsOf(batchDocs).persist()
+    bRows.count()
+    // rows already in the base (re-crawled identical versions):
+    // corpus SCAN + broadcast semi probe -> tiny frame
+    val overlap = baseRows.join(broadcast(bRows),
+      Seq("text_sha", "doc_id"), "leftsemi").persist()
+    overlap.count()
+    val fresh = bRows.join(broadcast(overlap),
+      Seq("text_sha", "doc_id"), "leftanti").persist()
+    fresh.count()
+    baseRows.union(fresh).write.parquet(s"$dir/rows")
+    // groups: pass untouched shas through; recombine touched ones
+    val touched = groupsOf(fresh)
+      .withColumnRenamed("keep_doc_id", "b_keep")
+      .withColumnRenamed("n_copies", "b_n")
+    val inBoth = baseGroups.join(broadcast(touched), Seq("text_sha"))
+      .select(col("text_sha"),
+        least(col("keep_doc_id"), col("b_keep")).as("keep_doc_id"),
+        (col("n_copies") + col("b_n")).as("n_copies"))
+      .persist()
+    inBoth.count()
+    val newShas = touched
+      .join(broadcast(inBoth.select("text_sha")), Seq("text_sha"),
+        "leftanti")
+      .select(col("text_sha"), col("b_keep").as("keep_doc_id"),
+        col("b_n").as("n_copies"))
+    val pass = baseGroups.join(broadcast(touched.select("text_sha")),
+      Seq("text_sha"), "leftanti")
+    pass.union(inBoth).union(newShas).write.parquet(s"$dir/groups")
+    Seq(bRows, overlap, fresh, inBoth).foreach(_.unpersist(false))
+  }
 
   /** FORGET documents from a ledger by doc_id — delete propagation
     * into the derived artifact (the right-to-be-forgotten path every
@@ -190,38 +174,31 @@ object LedgerOps {
     */
   def shaLedgerForget(spark: SparkSession, baseDir: String,
                       goneIds: DataFrame, tag: String): String =
-    synchronized {
-      require(tag.matches("[A-Za-z0-9_-]+"),
-        s"tag must be path-safe, got '$tag'")
-      val dir = s"${baseDir}_f_$tag"
-      if (!done(dir)) {
-        val baseRows = readRows(spark, baseDir)
-        val baseGroups = readGroups(spark, baseDir)
-        val gone = goneIds.select(col("doc_id").cast("long").as("doc_id"))
-          .distinct()
-        // shas the deletion touches: scan + broadcast semi -> tiny
-        val touchedShas = baseRows.join(broadcast(gone), Seq("doc_id"),
-            "leftsemi")
-          .select("text_sha").distinct().persist()
-        touchedShas.count()
-        // re-project: a usingColumns join moves the join key to the
-        // FRONT of the output, and rows must stay (text_sha, doc_id)
-        val survRows = baseRows.join(broadcast(gone), Seq("doc_id"),
-          "leftanti").select("text_sha", "doc_id").persist()
-        survRows.count()
-        survRows.write.mode("overwrite").parquet(s"$dir/rows")
-        // only touched groups re-elect; survivors of those shas are a
-        // batch-sized frame (scan + broadcast semi)
-        val recombined = groupsOf(
-          survRows.join(broadcast(touchedShas), Seq("text_sha"),
-            "leftsemi"))
-        val pass = baseGroups.join(broadcast(touchedShas), Seq("text_sha"),
-          "leftanti")
-        pass.union(recombined)
-          .write.mode("overwrite").parquet(s"$dir/groups")
-        touchedShas.unpersist(false); survRows.unpersist(false)
-      }
-      dir
+    Artifacts.derived(baseDir, "f", tag, ledgerParts) { dir =>
+      val baseRows = readRows(spark, baseDir)
+      val baseGroups = readGroups(spark, baseDir)
+      val gone = goneIds.select(col("doc_id").cast("long").as("doc_id"))
+        .distinct()
+      // shas the deletion touches: scan + broadcast semi -> tiny
+      val touchedShas = baseRows.join(broadcast(gone), Seq("doc_id"),
+          "leftsemi")
+        .select("text_sha").distinct().persist()
+      touchedShas.count()
+      // re-project: a usingColumns join moves the join key to the
+      // FRONT of the output, and rows must stay (text_sha, doc_id)
+      val survRows = baseRows.join(broadcast(gone), Seq("doc_id"),
+        "leftanti").select("text_sha", "doc_id").persist()
+      survRows.count()
+      survRows.write.parquet(s"$dir/rows")
+      // only touched groups re-elect; survivors of those shas are a
+      // batch-sized frame (scan + broadcast semi)
+      val recombined = groupsOf(
+        survRows.join(broadcast(touchedShas), Seq("text_sha"),
+          "leftsemi"))
+      val pass = baseGroups.join(broadcast(touchedShas), Seq("text_sha"),
+        "leftanti")
+      pass.union(recombined).write.parquet(s"$dir/groups")
+      touchedShas.unpersist(false); survRows.unpersist(false)
     }
 
   /** PROBE a batch against a ledger: for each batch document, the
@@ -260,47 +237,21 @@ object LedgerOps {
   /** Streaming ADMISSION step: probe micro-batch `batchId` against the
     * ledger chain left by batches 0..batchId-1, hand back the verdicts,
     * and MERGE the batch in so the next micro-batch sees it — the
-    * daily-crawl admission loop as an exactly-once streaming fold.
-    *
-    * Replay-safe by construction: batch ids are stable across restarts
-    * (checkpointed), each generation lives in a FLAT dir that is a
-    * pure function of (feedTag, batchId) (`<base>__feed_<tag>/g<id>` —
-    * flat, not appended to the previous name, so the path stays
-    * constant-length over an unbounded feed) — `feedTag` must be 1:1
-    * with the stream's CHECKPOINT, because batch ids only mean
-    * anything relative to one checkpoint — the merge is SUCCESS-gated
-    * (a replayed merge is skipped, not re-applied), and the probe
-    * reads immutable prior dirs — so a crash anywhere between probe,
-    * merge, and sink write replays to byte-identical verdicts. Because
-    * merge algebra is exact, every generation ≡ one merge of the feed
-    * so far, and for id-ordered feeds the verdict union ≡ the one-shot
-    * whole-feed probe (LedgerOpsSpec pins both across a restart).
+    * daily-crawl admission loop as an exactly-once streaming fold, one
+    * [[Generations.step]] (a replayed merge is skipped, not re-applied,
+    * and the probe reads immutable prior generations, so a crash
+    * anywhere between probe, merge, and sink write replays to
+    * byte-identical verdicts). Because merge algebra is exact, every
+    * generation ≡ one merge of the feed so far, and for id-ordered
+    * feeds the verdict union ≡ the one-shot whole-feed probe
+    * (LedgerOpsSpec pins both across a restart).
     */
   def shaLedgerAdmit(spark: SparkSession, sfDir: String, feedTag: String,
-                     batch: DataFrame, batchId: Long): DataFrame = {
-    require(feedTag.matches("[A-Za-z0-9_-]+"),
-      s"feedTag must be path-safe, got '$feedTag'")
-    val base = shaLedger(spark, sfDir)
-    val gen = feedGenDir(base, feedTag) _
-    val prev = if (batchId == 0L) base else gen(batchId - 1)
-    require(done(prev),
-      s"ledger chain broken before batch $batchId: $prev incomplete")
-    val verdicts = shaLedgerProbe(spark, prev, batch)
-    synchronized { mergeInto(spark, prev, gen(batchId), batch) }
-    verdicts
-  }
-
-  /** Flat per-generation dir of an admission feed (spec seam). */
-  private[ext] def feedGenDir(baseDir: String, feedTag: String)
-                             (batchId: Long): String =
-    s"${baseDir}__feed_$feedTag/g$batchId"
-
-  /** Retire old SHA-ledger admission generations
-    * ([[graft.io.Generations]] retention contract; completeness = the
-    * ledger's own rows/groups SUCCESS gate).
-    */
-  def feedGc(sfDir: String, feedTag: String, keepLast: Int): Seq[Long] =
-    graft.io.Generations.gc(ledgerDir(sfDir), feedTag, keepLast, done)
+                     batch: DataFrame, batchId: Long): DataFrame =
+    Generations.step(shaLedger(spark, sfDir), ledgerParts, feedTag,
+        batchId)(shaLedgerProbe(spark, _, batch)) { (_, prev, tmp) =>
+      mergeInto(spark, prev, tmp, batch)
+    }._1
 
   // ---- gated lifecycle queries ---------------------------------------
 

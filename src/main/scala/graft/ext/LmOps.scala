@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Artifacts
 import graft.ops.Canon
 
 /** N-gram language-model training and LM-based fluency filtering — the
@@ -96,32 +97,27 @@ object LmOps {
     (cAb, cA, voc)
   }
 
-  private def lmTrainDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"${graft.io.Artifacts.root}/lm_train/${tag}_m${lmRefMod}_$fp"
-  }
+  private def lmTrainDir(sfDir: String): String =
+    Artifacts.path("lm_train", sfDir, "documents.parquet", s"m$lmRefMod")
 
   /** [[trainTables]] through the shared artifact tier: the reference
     * LM's bigram counts and per-lang vocab sizes are pure functions of
     * the corpus, re-derived today by every consumer (the funnel, the
     * DoReMi weighter, the tercile bucketer) — persisted once
-    * (SUCCESS-gated, fingerprint-stamped) they become a read. `cA`
+    * (published through the store) they become a read. `cA`
     * derives from the persisted `cab` by one keyed rollup.
     * q_ngram_lm stays on the build path (the family's designated
     * builder, the q_bm25 rule); tier off ⇒ plain delegate.
     */
   private[graft] def trainTablesShared(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    if (!graft.io.Artifacts.sharedTier) trainTables(spark, sfDir)
-    else synchronized {
-      val dir = lmTrainDir(sfDir)
-      val done = Seq("cab", "voc").forall(t =>
-        new java.io.File(s"$dir/$t/_SUCCESS").exists())
-      if (!done) {
-        val (cAb, _, voc) = trainTables(spark, sfDir)
-        cAb.write.mode("overwrite").parquet(s"$dir/cab")
-        voc.write.mode("overwrite").parquet(s"$dir/voc")
+    if (!Artifacts.sharedTier) trainTables(spark, sfDir)
+    else {
+      val dir = Artifacts.getOrBuild(lmTrainDir(sfDir), Seq("cab", "voc")) {
+        tmp =>
+          val (cAb, _, voc) = trainTables(spark, sfDir)
+          cAb.write.parquet(s"$tmp/cab")
+          voc.write.parquet(s"$tmp/voc")
       }
       val cAb = spark.read.parquet(s"$dir/cab")
         .select("lang", "a", "b", "c_ab")
@@ -371,15 +367,10 @@ object LmOps {
   /** Persisted-index layout dir — fingerprinted like the LSH index so a
     * fixture or parameter change MISSES the old artifact.
     */
-  private[ext] def lmIndexDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"${graft.io.Artifacts.root}/lm_index/${tag}_m${lmRefMod}_$fp"
-  }
+  private[ext] def lmIndexDir(sfDir: String): String =
+    Artifacts.path("lm_index", sfDir, "documents.parquet", s"m$lmRefMod")
 
-  private def lmIndexDone(dir: String): Boolean =
-    Seq("cab", "vocab").forall(t =>
-      new java.io.File(s"$dir/$t/_SUCCESS").exists())
+  private val lmIndexParts = Seq("cab", "vocab")
 
   /** The BASE half of the reference slice: doc_id ≡ 0 (mod 10) — the
     * corpus the persisted index is built from. The other reference half
@@ -420,22 +411,20 @@ object LmOps {
     (cAb, vocab)
   }
 
-  /** Build (first call) or reuse (SUCCESS-gated) the persisted LM count
+  /** Build (first call) or reuse the persisted LM count
     * index over the BASE reference half: `cab` (lang, a, b, c_ab) and
     * `vocab` (lang, t). The build-once/probe-many contract of the LSH
     * and IVF indexes, for the LM family.
     */
-  def lmIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
-    synchronized {
-      val dir = lmIndexDir(sfDir)
-      if (!lmIndexDone(dir)) {
-        val (cAb, vocab) = countTables(baseRefDocs(spark, sfDir))
-        cAb.write.mode("overwrite").parquet(s"$dir/cab")
-        vocab.write.mode("overwrite").parquet(s"$dir/vocab")
-      }
-      (spark.read.parquet(s"$dir/cab"),
-        spark.read.parquet(s"$dir/vocab"))
+  def lmIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val dir = Artifacts.getOrBuild(lmIndexDir(sfDir), lmIndexParts) { tmp =>
+      val (cAb, vocab) = countTables(baseRefDocs(spark, sfDir))
+      cAb.write.parquet(s"$tmp/cab")
+      vocab.write.parquet(s"$tmp/vocab")
     }
+    (spark.read.parquet(s"$dir/cab"),
+      spark.read.parquet(s"$dir/vocab"))
+  }
 
   /** MERGE a document batch into the persisted LM index — the
     * daily-crawl maintenance path. Counts are ADDITIVE (the merge
@@ -443,30 +432,23 @@ object LmOps {
     * vocabularies union, so the merged index is EXACTLY the index a
     * from-scratch build over base ∪ batch would produce — spec-pinned,
     * and the reason [[ngramLmMerged]] can share [[ngramLmOracle]].
-    * Writes a NEW stamped `…_m_<tag>` dir (SUCCESS-gated); a crash
+    * Publishes a NEW stamped `…_m_<tag>` dir; a crash
     * mid-merge can never corrupt the base index.
     */
   def lmIndexMerge(spark: SparkSession, sfDir: String,
-                   batchDocs: DataFrame, batchTag: String): String =
-    synchronized {
-      require(batchTag.matches("[A-Za-z0-9_-]+"),
-        s"batchTag must be path-safe, got '$batchTag'")
-      val dir = s"${lmIndexDir(sfDir)}_m_$batchTag"
-      if (!lmIndexDone(dir)) {
-        lmIndex(spark, sfDir) // ensure the base exists
-        val baseDir = lmIndexDir(sfDir)
-        val baseCab = spark.read.parquet(s"$baseDir/cab")
-        val baseVocab = spark.read.parquet(s"$baseDir/vocab")
-        val (bCab, bVocab) = countTables(batchDocs)
-        baseCab.union(bCab).groupBy("lang", "a", "b")
-          .agg(sum("c_ab").as("c_ab"))
-          .write.mode("overwrite").parquet(s"$dir/cab")
-        baseVocab.union(bVocab).groupBy("lang", "t")
-          .agg(sum("c_tok").as("c_tok"))
-          .write.mode("overwrite").parquet(s"$dir/vocab")
-      }
-      dir
+                   batchDocs: DataFrame, batchTag: String): String = {
+    val baseDir = lmIndexDir(sfDir)
+    Artifacts.derived(baseDir, "m", batchTag, lmIndexParts) { dir =>
+      val (baseCab, baseVocab) = lmIndex(spark, sfDir)
+      val (bCab, bVocab) = countTables(batchDocs)
+      baseCab.union(bCab).groupBy("lang", "a", "b")
+        .agg(sum("c_ab").as("c_ab"))
+        .write.parquet(s"$dir/cab")
+      baseVocab.union(bVocab).groupBy("lang", "t")
+        .agg(sum("c_tok").as("c_tok"))
+        .write.parquet(s"$dir/vocab")
     }
+  }
 
   /** FORGET a document batch from an LM index — delete propagation into
     * the persisted model (the right-to-be-forgotten path a 100 TB
@@ -478,32 +460,26 @@ object LmOps {
     * [[ngramLmForgotten]] can share a rebuilt-form oracle. Requires the
     * forgotten docs' original text (the counts to remove are re-derived
     * from it, the base corpus is never re-read); writes a NEW stamped
-    * `…_f_<tag>` dir, SUCCESS-gated, base untouched.
+    * `…_f_<tag>` dir through the store, base untouched.
     */
   def lmIndexForget(spark: SparkSession, baseDir: String,
                     forgetDocs: DataFrame, tag: String): String =
-    synchronized {
-      require(tag.matches("[A-Za-z0-9_-]+"),
-        s"tag must be path-safe, got '$tag'")
-      val dir = s"${baseDir}_f_$tag"
-      if (!lmIndexDone(dir)) {
-        val baseCab = spark.read.parquet(s"$baseDir/cab")
-        val baseVocab = spark.read.parquet(s"$baseDir/vocab")
-        val (fCab, fVocab) = countTables(forgetDocs)
-        baseCab
-          .union(fCab.select(col("lang"), col("a"), col("b"),
-            (-col("c_ab")).as("c_ab")))
-          .groupBy("lang", "a", "b").agg(sum("c_ab").as("c_ab"))
-          .filter(col("c_ab") > 0)
-          .write.mode("overwrite").parquet(s"$dir/cab")
-        baseVocab
-          .union(fVocab.select(col("lang"), col("t"),
-            (-col("c_tok")).as("c_tok")))
-          .groupBy("lang", "t").agg(sum("c_tok").as("c_tok"))
-          .filter(col("c_tok") > 0)
-          .write.mode("overwrite").parquet(s"$dir/vocab")
-      }
-      dir
+    Artifacts.derived(baseDir, "f", tag, lmIndexParts) { dir =>
+      val baseCab = spark.read.parquet(s"$baseDir/cab")
+      val baseVocab = spark.read.parquet(s"$baseDir/vocab")
+      val (fCab, fVocab) = countTables(forgetDocs)
+      baseCab
+        .union(fCab.select(col("lang"), col("a"), col("b"),
+          (-col("c_ab")).as("c_ab")))
+        .groupBy("lang", "a", "b").agg(sum("c_ab").as("c_ab"))
+        .filter(col("c_ab") > 0)
+        .write.parquet(s"$dir/cab")
+      baseVocab
+        .union(fVocab.select(col("lang"), col("t"),
+          (-col("c_tok")).as("c_tok")))
+        .groupBy("lang", "t").agg(sum("c_tok").as("c_tok"))
+        .filter(col("c_tok") > 0)
+        .write.parquet(s"$dir/vocab")
     }
 
   /** The full FORGET round trip as one query: build the base-half

@@ -523,28 +523,23 @@ object MultimodalOps {
     Canon.materialized(Canon.canonicalize(out))
   }
 
-  private def videoPairsDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    val params =
+  private def videoPairsDir(sfDir: String): String =
+    graft.io.Artifacts.path("video_pairs", sfDir, "documents.parquet",
       s"fb$frameBytes-st$frameSampleStep-c$videoFrameBucketCap-" +
-        s"m$videoSharedFramesMin-v1"
-    s"${graft.io.Artifacts.root}/video_pairs/${tag}_${params}_$fp"
-  }
+        s"m$videoSharedFramesMin-v1")
 
   /** The verified shared-frame pair table as a persisted artifact —
     * the [[graft.ext.DedupOps.lshPairs]] contract applied to the video
-    * family (SUCCESS gate, kill switch, cached ≡ rebuilt).
+    * family (store publish, kill switch, cached ≡ rebuilt).
     * [[videoNearDup]] stays the designated builder; the recall row
     * reads this tier instead of re-deriving the frame chain.
     */
   def videoPairs(spark: SparkSession, sfDir: String): DataFrame =
     if (!graft.io.Artifacts.sharedTier) videoNearDup(spark, sfDir)
-    else synchronized {
-      val dir = videoPairsDir(sfDir)
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    else {
+      val dir = graft.io.Artifacts.getOrBuild(videoPairsDir(sfDir)) { tmp =>
         val built = videoNearDup(spark, sfDir) // materialized (cached)
-        built.write.mode("overwrite").parquet(dir)
+        built.write.parquet(tmp)
         built.unpersist(false)
       }
       graft.ops.Canon.materialized(spark.read.parquet(dir)

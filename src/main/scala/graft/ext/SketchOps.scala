@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.{Artifacts, Generations}
 import graft.ops.Canon
 
 /** Approximate-sketch twins of the exact aggregates — the forms a 100 TB
@@ -399,53 +400,38 @@ object SketchOps {
 
   // ---- streaming cardinality fold --------------------------------------
 
-  /** Fingerprinted base-sketch dir — the lshIndexDir rule: any fixture
-    * change misses the old artifact.
+  /** Fingerprinted base-sketch dir — any fixture change misses the
+    * old artifact.
     */
-  private[graft] def hllBaseDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"target/hll_index/${tag}_m${hllRegM}_w${hllRegW}_$fp"
-  }
+  private[graft] def hllBaseDir(sfDir: String): String =
+    Artifacts.path("hll_index", sfDir, "documents.parquet",
+      s"m${hllRegM}_w$hllRegW")
 
-  private def regsDone(dir: String): Boolean =
-    new java.io.File(s"$dir/_SUCCESS").exists()
-
-  /** Build-or-reuse the PERSISTED corpus register sketch (the
-    * SUCCESS-gated artifact-tier discipline). 256 registers per lang —
-    * the whole artifact is KB-sized at any corpus size, which is the
-    * point of carrying a sketch instead of the key set.
+  /** Build-or-reuse the PERSISTED corpus register sketch. 256 registers
+    * per lang — the whole artifact is KB-sized at any corpus size,
+    * which is the point of carrying a sketch instead of the key set.
     */
   def hllIndex(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val dir = hllBaseDir(sfDir)
-      if (!regsDone(dir))
-        hllRegisters(TextOps.documents(spark, sfDir))
-          .write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir)
-    }
+    Artifacts.frame(spark, hllBaseDir(sfDir))(
+      hllRegisters(TextOps.documents(spark, sfDir)))
 
-  private[ext] def hllGenDir(base: String, feedTag: String)(
-      id: Long): String = s"${base}__feed_$feedTag/g$id"
-
-  /** Retire old sketch generations — the [[graft.io.Generations]]
-    * retention contract with parquet-_SUCCESS completeness.
-    */
+  /** Retire old sketch generations — the [[Generations]] contract. */
   def hllGc(sfDir: String, feedTag: String, keepLast: Int): Seq[Long] =
-    graft.io.Generations.gc(hllBaseDir(sfDir), feedTag, keepLast,
-      dir => new java.io.File(s"$dir/_SUCCESS").exists())
+    Generations.gc(hllBaseDir(sfDir), feedTag, keepLast,
+      Artifacts.complete(_))
 
   /** Streaming CARDINALITY fold — the ingest dashboard's "how many
     * distinct grams has this corpus seen, as of this batch" row,
     * maintained without ever re-touching the corpus: micro-batch N's
     * register table merges (pointwise max — HLL's defining algebra)
-    * into the SUCCESS-gated generation left by batches 0..N−1, seeded
-    * by the persisted corpus sketch. State is 256 registers per lang
-    * REGARDLESS of feed length — the streaming twin of what makes the
-    * sketch the 100 TB cardinality primitive. Idempotent under
+    * into the generation left by batches 0..N−1 (one
+    * [[Generations.fold]]), seeded by the persisted corpus sketch.
+    * State is 256 registers per lang REGARDLESS of feed length — the
+    * streaming twin of what makes the sketch the 100 TB cardinality
+    * primitive. Idempotent under
     * foreachBatch's at-least-once replay: a re-run batch finds its
-    * generation SUCCESS-gated and re-reads instead of re-merging
-    * (merge with max is idempotent anyway — the gate makes it also
+    * generation published and re-reads instead of re-merging
+    * (merge with max is idempotent anyway — the store makes it also
     * cheap). Returns the batch's summary row per lang, batch-stamped.
     *
     * `batch` must carry (doc_id, lang, text). Estimates are monotone
@@ -455,20 +441,14 @@ object SketchOps {
     */
   def hllFold(spark: SparkSession, sfDir: String, feedTag: String,
               batch: DataFrame, batchId: Long): DataFrame = {
-    require(feedTag.matches("[A-Za-z0-9_-]+"),
-      s"feedTag must be path-safe, got '$feedTag'")
     hllIndex(spark, sfDir) // ensure the base sketch exists
-    val base = hllBaseDir(sfDir)
-    val gen = hllGenDir(base, feedTag) _
-    val prev = if (batchId == 0L) base else gen(batchId - 1)
-    require(regsDone(prev),
-      s"sketch chain broken before batch $batchId: $prev incomplete")
-    val out = gen(batchId)
-    if (!regsDone(out))
-      spark.read.parquet(prev)
-        .union(hllRegisters(batch))
-        .groupBy("lang", "idx").agg(max("rank").as("rank"))
-        .write.mode("overwrite").parquet(out)
+    val out = Generations.fold(hllBaseDir(sfDir), Nil, feedTag, batchId) {
+      (prev, tmp) =>
+        spark.read.parquet(prev)
+          .union(hllRegisters(batch))
+          .groupBy("lang", "idx").agg(max("rank").as("rank"))
+          .write.parquet(tmp)
+    }
     graft.ops.Canon.canonicalize(
       hllSummaryCore(spark.read.parquet(out))
         .withColumn("batch_id", lit(batchId))
@@ -484,11 +464,11 @@ object SketchOps {
     * oracle-hash-checked, not just spec'd: the oracle recomputes each
     * generation as the from-scratch sketch of corpus ∪ feed-prefix
     * (the merge law the spec proves is what makes that equality
-    * valid). SUCCESS-gated generations make re-runs byte-identical.
+    * valid). Published generations make re-runs byte-identical.
     */
   /** Gate-batch definition constants, baked into [[hllGateTag]] so a
     * persisted gate chain self-invalidates when the batch definition
-    * changes (stale SUCCESS-gated generations would otherwise keep
+    * changes (stale published generations would otherwise keep
     * serving the old chain until target/ is cleaned by hand).
     */
   private val hllGateMod = 2
@@ -804,53 +784,34 @@ object SketchOps {
 
   // ---- streaming HDR fold (the admission-fold family, quantile arm) --
 
-  private[graft] def hdrBaseDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/events.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"target/hdr_index/${tag}_m${hdrMantissaBits}_s${hdrScale}_$fp"
-  }
-
-  private def hdrDone(dir: String): Boolean =
-    new java.io.File(s"$dir/_SUCCESS").exists()
+  private[graft] def hdrBaseDir(sfDir: String): String =
+    Artifacts.path("hdr_index", sfDir, "events.parquet",
+      s"m${hdrMantissaBits}_s$hdrScale")
 
   /** Build-or-reuse the PERSISTED corpus bucket table — one row per
     * (group, bucket), bounded by the value range at any corpus size.
     */
   def hdrIndex(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val dir = hdrBaseDir(sfDir)
-      if (!hdrDone(dir))
-        hdrBuckets(EventOps.events(spark, sfDir))
-          .write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir)
-    }
-
-  private[ext] def hdrGenDir(base: String, feedTag: String)(
-      id: Long): String = s"${base}__feed_$feedTag/g$id"
+    Artifacts.frame(spark, hdrBaseDir(sfDir))(
+      hdrBuckets(EventOps.events(spark, sfDir)))
 
   /** STREAMING BUCKET FOLD — each micro-batch's bucket counts ADD onto
     * the running sketch (counts are additive, so fold ≡ from-scratch
     * sketch of corpus ∪ batches — the HLL/PCA admission-fold law, on
-    * the quantile arm). SUCCESS-gated generations, loud chain check;
+    * the quantile arm). One [[Generations.fold]] per batch;
     * the return value is the folded sketch's quantile rows stamped
     * with the batch id.
     */
   def hdrFold(spark: SparkSession, sfDir: String, feedTag: String,
               batch: DataFrame, batchId: Long): DataFrame = {
-    require(feedTag.matches("[A-Za-z0-9_-]+"),
-      s"feedTag must be path-safe, got '$feedTag'")
     hdrIndex(spark, sfDir)
-    val base = hdrBaseDir(sfDir)
-    val gen = hdrGenDir(base, feedTag) _
-    val prev = if (batchId == 0L) base else gen(batchId - 1)
-    require(hdrDone(prev),
-      s"bucket chain broken before batch $batchId: $prev incomplete")
-    val out = gen(batchId)
-    if (!hdrDone(out))
-      spark.read.parquet(prev)
-        .unionByName(hdrBuckets(batch))
-        .groupBy("event_type", "lb").agg(sum("cnt").as("cnt"))
-        .write.mode("overwrite").parquet(out)
+    val out = Generations.fold(hdrBaseDir(sfDir), Nil, feedTag, batchId) {
+      (prev, tmp) =>
+        spark.read.parquet(prev)
+          .unionByName(hdrBuckets(batch))
+          .groupBy("event_type", "lb").agg(sum("cnt").as("cnt"))
+          .write.parquet(tmp)
+    }
     Canon.canonicalize(
       hdrFromBuckets(spark, spark.read.parquet(out))
         .withColumn("batch_id", lit(batchId))
@@ -860,8 +821,8 @@ object SketchOps {
 
   /** Retire old bucket generations — the Generations contract. */
   def hdrGc(sfDir: String, feedTag: String, keepLast: Int): Seq[Long] =
-    graft.io.Generations.gc(hdrBaseDir(sfDir), feedTag, keepLast,
-      hdrDone)
+    Generations.gc(hdrBaseDir(sfDir), feedTag, keepLast,
+      Artifacts.complete(_))
 
   /** Gate-batch definition constants, baked into [[hdrGateTag]] so a
     * persisted gate chain self-invalidates when the batch definition

@@ -1213,11 +1213,8 @@ object TextOps {
     * parameter in the path; the tokenizer is [[CurationOps.toksCol]],
     * versioned by the tag).
     */
-  private def bm25TfDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"${graft.io.Artifacts.root}/bm25_tf/${tag}_toks1_$fp"
-  }
+  private def bm25TfDir(sfDir: String): String =
+    graft.io.Artifacts.path("bm25_tf", sfDir, "documents.parquet", "toks1")
 
   private def buildTf(spark: SparkSession, sfDir: String): DataFrame =
     documents(spark, sfDir)
@@ -1230,22 +1227,20 @@ object TextOps {
   /** The (lang, doc_id, token, tf) postings table, shared-tier form:
     * the corpus tokenization is the expensive half of every text
     * ranker, and it is a pure function of the corpus — so it is built
-    * once (SUCCESS-gated, fingerprint-stamped) and every ranker after
-    * the first reads it. Derived frames (dl, df, per-lang stats) are
-    * keyed rollups of THIS table, orders smaller than the token
-    * stream, and stay in-memory per query. All downstream arithmetic
-    * is single-valued or integer-summed per group, so tier ≡ rebuilt
-    * bit-for-bit and the standalone oracles stay valid.
+    * once (published through the store, fingerprint-stamped) and
+    * every ranker after the first reads it. Derived frames (dl, df,
+    * per-lang stats) are keyed rollups of THIS table, orders smaller
+    * than the token stream, and stay in-memory per query. All
+    * downstream arithmetic is single-valued or integer-summed per
+    * group, so tier ≡ rebuilt bit-for-bit and the standalone oracles
+    * stay valid.
     */
   private[ext] def tfPostings(spark: SparkSession, sfDir: String,
                               useTier: Boolean): DataFrame =
     if (!useTier || !graft.io.Artifacts.sharedTier) buildTf(spark, sfDir)
-    else synchronized {
-      val dir = bm25TfDir(sfDir)
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        buildTf(spark, sfDir).write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir).select("lang", "doc_id", "token", "tf")
-    }
+    else graft.io.Artifacts.frame(spark, bm25TfDir(sfDir))(
+        buildTf(spark, sfDir))
+      .select("lang", "doc_id", "token", "tf")
 
   /** The BM25 chain up to the per-lang ranked top-k list — shared by
     * the standalone query, the RRF fusion, and the retrieval-eval

@@ -1,11 +1,9 @@
 package graft.ext
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Fingerprint
+import graft.io.Artifacts
 import graft.ops.Canon
 
 /** Unigram-LM (SentencePiece-style) tokenizer: a seeded piece
@@ -53,7 +51,7 @@ import graft.ops.Canon
   * still bounded and corpus-independent). Encoding rides the same
   * distinct-word table: segment once per word in codegen, broadcast
   * the per-word stats back onto the token stream. The trained table is
-  * a SUCCESS-gated fingerprint-stamped parquet artifact (the
+  * a fingerprint-stamped parquet artifact in the store (the
   * [[BpeOps.trainedMerges]] / LSH-index contract): a new JVM reloads
   * instead of retraining.
   *
@@ -208,33 +206,24 @@ object UnigramOps {
     model
   }
 
-  private val pieceCache =
-    new ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
+  private val uniKind = "unigram_index"
 
   /** Trained (piece, cnt, cost_fp) table for a fixture dir — JVM memo
-    * over a SUCCESS-gated fingerprint-stamped parquet artifact (the
+    * over a fingerprint-stamped parquet artifact (the
     * [[BpeOps.trainedMerges]] contract; UnigramOpsSpec pins the
     * artifact round trip).
     */
   private[graft] def trainedPieces(spark: SparkSession, sfDir: String)
       : Seq[(String, Long, Long)] = {
     import spark.implicits._
-    val fp = Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val key = s"$sfDir#q4#$uniMaxPiece#$uniSeedBudget#$uniBudget#$uniRounds#$fp"
-    Option(pieceCache.get(key)).getOrElse {
-      val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-      val dir = s"${graft.io.Artifacts.root}/unigram_index/" +
-        s"${tag}_q4_p${uniMaxPiece}_s${uniSeedBudget}_b${uniBudget}" +
-        s"_r${uniRounds}_$fp/pieces"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val trained = trainLoop(spark, tokenWords(spark, sfDir))
-        spark.createDataset(trained).toDF("piece", "cnt", "cost_fp")
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-      }
-      val loaded = spark.read.parquet(dir)
+    val dir = Artifacts.path(uniKind, sfDir, "documents.parquet",
+      s"q4_p${uniMaxPiece}_s${uniSeedBudget}_b${uniBudget}_r$uniRounds") +
+      "/pieces"
+    Artifacts.memoized(uniKind, dir) {
+      Artifacts.frame(spark, dir)(
+          spark.createDataset(trainLoop(spark, tokenWords(spark, sfDir)))
+            .toDF("piece", "cnt", "cost_fp").coalesce(1))
         .as[(String, Long, Long)].collect().toSeq.sortBy(_._1)
-      pieceCache.put(key, loaded)
-      loaded
     }
   }
 
@@ -444,9 +433,7 @@ object UnigramOps {
       .filter(length(col("w")) > 0) // no-empty-words invariant (tokenWords)
       .groupBy("w").agg(count(lit(1)).as("f"))
 
-  private def lifecycleDone(dir: String): Boolean =
-    Seq("words", "pieces").forall(t =>
-      new java.io.File(s"$dir/$t/_SUCCESS").exists())
+  private val lifecycleParts = Seq("words", "pieces")
 
   /** Lifecycle BASE corpus: even doc_ids; the odd half arrives later
     * as the merge batch, so base ∪ batch = the whole fixture — which
@@ -468,34 +455,27 @@ object UnigramOps {
   private def oddHalf(spark: SparkSession, sfDir: String): DataFrame =
     documents(spark, sfDir).filter(col("doc_id") % 2 === 1)
 
-  private def lifecycleDir(sfDir: String): String = {
-    val fp = Fingerprint.ofPath(s"$sfDir/documents.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"${graft.io.Artifacts.root}/unigram_index/" +
-      s"${tag}_base2_q4_p${uniMaxPiece}_s${uniSeedBudget}_b${uniBudget}" +
-      s"_r${uniRounds}_$fp"
-  }
+  private def lifecycleDir(sfDir: String): String =
+    Artifacts.path(uniKind, sfDir, "documents.parquet",
+      s"base2_q4_p${uniMaxPiece}_s${uniSeedBudget}_b${uniBudget}" +
+        s"_r$uniRounds")
 
   private def writeIndex(spark: SparkSession, dir: String,
                          words: DataFrame): Unit = {
     import spark.implicits._
-    words.write.mode("overwrite").parquet(s"$dir/words")
+    words.write.parquet(s"$dir/words")
     val persisted = spark.read.parquet(s"$dir/words")
     spark.createDataset(trainLoop(spark, persisted))
       .toDF("piece", "cnt", "cost_fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/pieces")
+      .coalesce(1).write.parquet(s"$dir/pieces")
   }
 
-  /** Build (or SUCCESS-gated reuse) the base-half unigram index: the
-    * word ledger AND the piece table trained from it.
+  /** Build (or reuse) the base-half unigram index: the word ledger
+    * AND the piece table trained from it.
     */
   def unigramIndex(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val dir = lifecycleDir(sfDir)
-      if (!lifecycleDone(dir))
-        writeIndex(spark, dir, wordCounts(baseHalf(spark, sfDir)))
-      dir
-    }
+    Artifacts.getOrBuild(lifecycleDir(sfDir), lifecycleParts)(
+      writeIndex(spark, _, wordCounts(baseHalf(spark, sfDir))))
 
   /** MERGE a document batch into a persisted unigram index: batch word
     * counts ADD to the ledger (base corpus never re-tokenized), pieces
@@ -503,20 +483,13 @@ object UnigramOps {
     * batch-sized tokenization. New stamped `…_m_<tag>` dir.
     */
   def unigramIndexMerge(spark: SparkSession, sfDir: String,
-                        batchDocs: DataFrame, batchTag: String): String =
-    synchronized {
-      require(batchTag.matches("[A-Za-z0-9_-]+"),
-        s"batchTag must be path-safe, got '$batchTag'")
-      val base = unigramIndex(spark, sfDir)
-      val dir = s"${base}_m_$batchTag"
-      if (!lifecycleDone(dir)) {
-        val merged = spark.read.parquet(s"$base/words")
-          .union(wordCounts(batchDocs))
-          .groupBy("w").agg(sum("f").as("f"))
-        writeIndex(spark, dir, merged)
-      }
-      dir
-    }
+                        batchDocs: DataFrame, batchTag: String): String = {
+    val base = unigramIndex(spark, sfDir)
+    Artifacts.derived(base, "m", batchTag, lifecycleParts)(
+      writeIndex(spark, _, spark.read.parquet(s"$base/words")
+        .union(wordCounts(batchDocs))
+        .groupBy("w").agg(sum("f").as("f"))))
+  }
 
   /** FORGET a document batch: its word counts SUBTRACT from the
     * ledger (zero rows dropped), pieces retrain. `…_f_<tag>` dir;
@@ -524,20 +497,12 @@ object UnigramOps {
     */
   def unigramIndexForget(spark: SparkSession, baseDir: String,
                          forgetDocs: DataFrame, tag: String): String =
-    synchronized {
-      require(tag.matches("[A-Za-z0-9_-]+"),
-        s"tag must be path-safe, got '$tag'")
-      val dir = s"${baseDir}_f_$tag"
-      if (!lifecycleDone(dir)) {
-        val remaining = spark.read.parquet(s"$baseDir/words")
-          .union(wordCounts(forgetDocs)
-            .select(col("w"), (-col("f")).as("f")))
-          .groupBy("w").agg(sum("f").as("f"))
-          .filter(col("f") > 0)
-        writeIndex(spark, dir, remaining)
-      }
-      dir
-    }
+    Artifacts.derived(baseDir, "f", tag, lifecycleParts)(
+      writeIndex(spark, _, spark.read.parquet(s"$baseDir/words")
+        .union(wordCounts(forgetDocs)
+          .select(col("w"), (-col("f")).as("f")))
+        .groupBy("w").agg(sum("f").as("f"))
+        .filter(col("f") > 0)))
 
   private def readPieces(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.io.Tables
+import graft.io.{Artifacts, Generations, Tables}
 import graft.ops.Canon
 import graft.plans.TopK
 
@@ -1355,59 +1355,54 @@ object VectorOps {
        |FROM ne LEFT JOIN ncw USING (probe_id)
        |        LEFT JOIN ncr USING (probe_id)""".stripMargin
 
-  /** Trained quantizers are an INDEX: built once per dataset, reused by
-    * every query (the standard IVF lifecycle — index build is offline,
-    * nprobe search is online). Keyed on the dataset path + training
-    * params; sound to memoize because training is bit-deterministic
-    * (decimal sums, seedless init — spec'd in VectorOpsSpec).
+  /** Root dir of the PERSISTED trained-index artifacts for a dataset
+    * (the store's `ivf_index` kind): centroids, PQ codebooks and code
+    * tables land under here, fingerprint-stamped like the LSH index,
+    * so a NEW JVM reloads the trained index instead of retraining.
     */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]
+  private def ivfIndexDir(sfDir: String): String =
+    Artifacts.path(ivfKind, sfDir, "embeddings.parquet",
+      s"c${ivfCentroids}_i$ivfIters")
 
-  /** Data fingerprint of the embeddings source folded into the cache
-    * key — see [[graft.io.Fingerprint]] for the staleness contract.
-    */
-  private def dataFingerprint(path: String): String =
-    graft.io.Fingerprint.ofPath(path)
+  private val ivfKind = "ivf_index"
 
-  /** Root dir of the PERSISTED trained-index artifacts for a dataset:
-    * centroids (and PQ codebooks) land under here, SUCCESS-gated and
-    * fingerprint-stamped like the LSH index, so a NEW JVM reloads the
-    * trained index instead of retraining — the restart path the
-    * in-JVM memo alone cannot provide.
+  /** A trained table under [[ivfIndexDir]] through the THREE tiers:
+    * JVM memo (keyed by the artifact dir) → persisted artifact →
+    * train-and-publish. Trained quantizers are an INDEX, built once per
+    * dataset and reused by every query (index build is offline, nprobe
+    * search is online); training is bit-deterministic (decimal sums,
+    * seedless init — spec'd in VectorOpsSpec), so all tiers agree by
+    * construction (IvfPersistSpec pins reload ≡ retrain across a
+    * simulated restart).
     */
-  private def ivfIndexDir(sfDir: String, fp: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"${graft.io.Artifacts.root}/ivf_index/" +
-      s"${tag}_c${ivfCentroids}_i${ivfIters}_$fp"
-  }
+  private def memoTable[T](spark: SparkSession, dir: String)
+                          (train: => DataFrame)(load: DataFrame => T): T =
+    Artifacts.memoized(ivfKind, dir)(load(Artifacts.frame(spark, dir)(train)))
 
-  /** Centroid rows through the THREE-tier cache: JVM memo → persisted
-    * artifact → train-and-publish. Training is bit-deterministic, so
-    * all tiers agree by construction (and IvfPersistSpec pins reload ≡
-    * retrain across a simulated restart).
-    */
   private def cachedCentroids(spark: SparkSession, sfDir: String,
                               e: DataFrame, variant: String = "")
       : Seq[(Long, Seq[Double])] = {
     import spark.implicits._
-    val fp = dataFingerprint(s"$sfDir/embeddings.parquet")
-    centroidCache.computeIfAbsent(
-      s"$sfDir#$ivfCentroids#$ivfIters#$fp#$variant", _ => {
-        val dir = s"${ivfIndexDir(sfDir, fp)}/centroids$variant"
-        if (!new java.io.File(s"$dir/_SUCCESS").exists())
-          trainedCentroids(e).write.mode("overwrite").parquet(dir)
-        spark.read.parquet(dir).as[(Long, Seq[Double])].collect()
-          .toSeq.sortBy(_._1)
-      })
+    memoTable(spark, s"${ivfIndexDir(sfDir)}/centroids$variant")(
+      trainedCentroids(e))(
+      _.as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1))
   }
 
-  /** TEST HOOK: drop the in-JVM memo tiers (simulates a JVM restart so
-    * specs can prove the disk tier serves the reload).
-    */
-  private[graft] def clearMemos(): Unit = {
-    centroidCache.clear(); pqCache.clear()
+  /** PQ codebook rows (j, cent_id, cv) of a trained-codebook frame. */
+  private def codebookFrame(spark: SparkSession, dir: String)
+                           (train: => DataFrame): DataFrame = {
+    import spark.implicits._
+    memoTable(spark, dir)(train)(
+      _.as[(Int, Long, Seq[Double])].collect().toSeq
+        .sortBy(r => (r._1, r._2)))
+      .toDF("j", "cent_id", "cv")
   }
+
+  /** TEST HOOK: drop the in-JVM memo tier of this family's artifacts
+    * (simulates a JVM restart so specs can prove the disk tier serves
+    * the reload).
+    */
+  private[graft] def clearMemos(): Unit = Artifacts.clearMemos(ivfKind)
 
   def annIvf(spark: SparkSession, sfDir: String, nprobe: Int = 4): DataFrame = {
     import spark.implicits._
@@ -1920,9 +1915,6 @@ object VectorOps {
     cents
   }
 
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, Long, Seq[Double])]]
-
   /** IVF-PQ ANN — the compressed tier past [[annIvfSq8]] (FAISS
     * `IVFPQ` shape): the coarse IVF stage is unchanged (trained
     * centroids, nprobe nearest buckets per probe), but the bucketed
@@ -1953,19 +1945,10 @@ object VectorOps {
   /** Trained PQ codebooks through the memo/artifact tiers (the
     * [[cachedCentroids]] pattern), as a broadcastable frame. */
   private def cachedPqCodebooks(spark: SparkSession,
-                                sfDir: String, e: DataFrame): DataFrame = {
-    import spark.implicits._
-    val fp = dataFingerprint(s"$sfDir/embeddings.parquet")
-    pqCache.computeIfAbsent(
-      s"$sfDir#$pqM#$pqK#$pqIters#$fp", _ => {
-        val dir = s"${ivfIndexDir(sfDir, fp)}/pq_${pqM}_${pqK}_$pqIters"
-        if (!new java.io.File(s"$dir/_SUCCESS").exists())
-          trainedPqCodebooks(e).write.mode("overwrite").parquet(dir)
-        spark.read.parquet(dir).as[(Int, Long, Seq[Double])]
-          .collect().toSeq.sortBy(r => (r._1, r._2))
-      })
-      .toDF("j", "cent_id", "cv")
-  }
+                                sfDir: String, e: DataFrame): DataFrame =
+    codebookFrame(spark,
+      s"${ivfIndexDir(sfDir)}/pq_${pqM}_${pqK}_$pqIters")(
+      trainedPqCodebooks(e))
 
   /** Encode the corpus against `codebooks`: (vec_id, j, code) — one
     * argmin per (vector, sub-space). Shared by the raw arm (over the
@@ -1983,7 +1966,7 @@ object VectorOps {
     * deployment: codes, not vectors, are what it keeps. Until round 14
     * every probe call RE-ENCODED the corpus (m·k interpreted-lambda L2
     * argmins per vector — measured 38 s cold / ~3 s per warm bench
-    * pass at sf0.1); encoding is now a SUCCESS-gated one-time artifact
+    * pass at sf0.1); encoding is now a one-time published artifact
     * under the same fingerprint-stamped index dir as centroids and
     * codebooks (the annIvf discipline), and probe calls READ codes.
     * Corpus-sized, so it stays parquet — never collected or memoized
@@ -1991,13 +1974,7 @@ object VectorOps {
     */
   private def cachedPqCodes(spark: SparkSession, sfDir: String,
                             name: String)(build: => DataFrame): DataFrame =
-    synchronized {
-      val fp = dataFingerprint(s"$sfDir/embeddings.parquet")
-      val dir = s"${ivfIndexDir(sfDir, fp)}/$name"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        build.write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir)
-    }
+    Artifacts.frame(spark, s"${ivfIndexDir(sfDir)}/$name")(build)
 
   private def pqCodesName = s"pqcodes_${pqM}_${pqK}_$pqIters"
   private def pqrCodesName = s"pqrcodes_${pqM}_${pqK}_$pqIters"
@@ -2462,19 +2439,10 @@ object VectorOps {
     * the corpus × C assignment and the bucket-means aggregation run
     * once per build instead of once per Lloyd round per consumer. */
   private def cachedPqrCodebooksFrom(spark: SparkSession, sfDir: String,
-                                     res: => DataFrame): DataFrame = {
-    import spark.implicits._
-    val fp = dataFingerprint(s"$sfDir/embeddings.parquet")
-    pqCache.computeIfAbsent(
-      s"$sfDir#pqrm#$pqM#$pqK#$pqIters#$fp", _ => {
-        val dir = s"${ivfIndexDir(sfDir, fp)}/pqrm_${pqM}_${pqK}_$pqIters"
-        if (!new java.io.File(s"$dir/_SUCCESS").exists())
-          trainedPqCodebooks(res).write.mode("overwrite").parquet(dir)
-        spark.read.parquet(dir).as[(Int, Long, Seq[Double])]
-          .collect().toSeq.sortBy(r => (r._1, r._2))
-      })
-      .toDF("j", "cent_id", "cv")
-  }
+                                     res: => DataFrame): DataFrame =
+    codebookFrame(spark,
+      s"${ivfIndexDir(sfDir)}/pqrm_${pqM}_${pqK}_$pqIters")(
+      trainedPqCodebooks(res))
 
   /** RESIDUAL coarse score (the standard IVF-ADC construction, FAISS
     * `IVFPQ` with `by_residual=true`): each vector's PQ codes encode
@@ -3220,30 +3188,23 @@ object VectorOps {
   private def vecSideLt(permille: Int): Column =
     DedupOps.sideBucket(col("vec_id")) < permille
 
-  private def ivfLcDone(dir: String): Boolean =
-    Seq("centroids", "postings").forall(t =>
-      new java.io.File(s"$dir/$t/_SUCCESS").exists())
+  /** The tables of a lifecycle IVF index. */
+  private val ivfLcParts = Seq("centroids", "postings")
 
-  /** Build (or SUCCESS-gated reuse) the base-slice IVF index: codebook
-    * trained on the base slice only, postings = the base slice encoded
-    * under it.
+  /** Build (or reuse) the base-slice IVF index: codebook trained on
+    * the base slice only, postings = the base slice encoded under it.
     */
-  def ivfIndex(spark: SparkSession, sfDir: String): String = synchronized {
-    val fp = dataFingerprint(s"$sfDir/embeddings.parquet")
-    val dir = s"${ivfIndexDir(sfDir, fp)}_lc"
-    if (!ivfLcDone(dir)) {
+  def ivfIndex(spark: SparkSession, sfDir: String): String =
+    Artifacts.getOrBuild(ivfFoldBaseDir(sfDir), ivfLcParts) { dir =>
       val base = allVecs(spark, sfDir)
         .filter(vecSideLt(DedupOps.incrementalCorpusPermille))
         .persist()
-      trainedCentroids(base).write.mode("overwrite")
-        .parquet(s"$dir/centroids")
+      trainedCentroids(base).write.parquet(s"$dir/centroids")
       assignNearest(base, spark.read.parquet(s"$dir/centroids"))
         .select(col("vec_id"), col("v"), col("bucket"))
-        .write.mode("overwrite").parquet(s"$dir/postings")
+        .write.parquet(s"$dir/postings")
       base.unpersist(false)
     }
-    dir
-  }
 
   /** MERGE new vectors into a persisted IVF index: encode them with the
     * STORED codebook (the base corpus is never re-read, the codebook
@@ -3251,22 +3212,17 @@ object VectorOps {
     * dir; merged ≡ re-encoding base ∪ batch under the same codebook.
     */
   def ivfIndexMerge(spark: SparkSession, sfDir: String,
-                    batchVecs: DataFrame, batchTag: String): String =
-    synchronized {
-      require(batchTag.matches("[A-Za-z0-9_-]+"),
-        s"batchTag must be path-safe, got '$batchTag'")
-      val base = ivfIndex(spark, sfDir)
-      val dir = s"${base}_m_$batchTag"
-      if (!ivfLcDone(dir)) {
-        val cents = spark.read.parquet(s"$base/centroids")
-        spark.read.parquet(s"$base/postings")
-          .union(assignNearest(batchVecs, cents)
-            .select(col("vec_id"), col("v"), col("bucket")))
-          .write.mode("overwrite").parquet(s"$dir/postings")
-        cents.write.mode("overwrite").parquet(s"$dir/centroids")
-      }
-      dir
+                    batchVecs: DataFrame, batchTag: String): String = {
+    val base = ivfIndex(spark, sfDir)
+    Artifacts.derived(base, "m", batchTag, ivfLcParts) { dir =>
+      val cents = spark.read.parquet(s"$base/centroids")
+      spark.read.parquet(s"$base/postings")
+        .union(assignNearest(batchVecs, cents)
+          .select(col("vec_id"), col("v"), col("bucket")))
+        .write.parquet(s"$dir/postings")
+      cents.write.parquet(s"$dir/centroids")
     }
+  }
 
   /** FORGET vectors from a persisted IVF index — postings are per-vector
     * state, so the anti-join IS the re-encode of the surviving corpus
@@ -3276,34 +3232,25 @@ object VectorOps {
     */
   def ivfIndexForget(spark: SparkSession, baseDir: String,
                      forgetIds: DataFrame, tag: String): String =
-    synchronized {
-      require(tag.matches("[A-Za-z0-9_-]+"),
-        s"tag must be path-safe, got '$tag'")
-      val dir = s"${baseDir}_f_$tag"
-      if (!ivfLcDone(dir)) {
-        spark.read.parquet(s"$baseDir/postings")
-          .join(broadcast(forgetIds.select("vec_id")), Seq("vec_id"),
-            "left_anti")
-          .write.mode("overwrite").parquet(s"$dir/postings")
-        spark.read.parquet(s"$baseDir/centroids")
-          .write.mode("overwrite").parquet(s"$dir/centroids")
-      }
-      dir
+    Artifacts.derived(baseDir, "f", tag, ivfLcParts) { dir =>
+      spark.read.parquet(s"$baseDir/postings")
+        .join(broadcast(forgetIds.select("vec_id")), Seq("vec_id"),
+          "left_anti")
+        .write.parquet(s"$dir/postings")
+      spark.read.parquet(s"$baseDir/centroids")
+        .write.parquet(s"$dir/centroids")
     }
 
   // ---- streaming IVF admission fold (admission-fold family, ANN arm) --
 
-  /** Base dir of the lifecycle IVF index (for the Runner GC sweep). */
-  private[graft] def ivfFoldBaseDir(sfDir: String): String = {
-    val fp = dataFingerprint(s"$sfDir/embeddings.parquet")
-    s"${ivfIndexDir(sfDir, fp)}_lc"
-  }
+  /** Base dir of the lifecycle IVF index. */
+  private[graft] def ivfFoldBaseDir(sfDir: String): String =
+    s"${ivfIndexDir(sfDir)}_lc"
 
-  private def ivfPostingsDone(dir: String): Boolean =
-    new java.io.File(s"$dir/postings/_SUCCESS").exists()
-
-  private[ext] def ivfGenDir(base: String, feedTag: String)(
-      id: Long): String = s"${base}__feed_$feedTag/g$id"
+  /** The table of each postings generation (centroids stay frozen in
+    * the base).
+    */
+  private[graft] val ivfFoldParts = Seq("postings")
 
   /** STREAMING POSTINGS FOLD — the ANN arm of the admission-fold
     * family (SHA/LSH/HLL/PCA/HDR already fold): each micro-batch is
@@ -3311,32 +3258,21 @@ object VectorOps {
     * onto the running index. Postings are per-vector state, so append
     * IS the fold and fold ≡ from-scratch encode of base ∪ batches —
     * the lifecycle law [[ivfIndexMerge]] rests on, made a streaming
-    * chain with SUCCESS-gated generations and a loud chain check.
+    * chain through [[Generations.fold]].
     * Returns the lifecycle probes' search results over the folded
     * index, stamped with the batch id — the gate exercises the actual
     * SEARCH, not just the bucket bookkeeping.
     */
   def ivfFold(spark: SparkSession, sfDir: String, feedTag: String,
               batch: DataFrame, batchId: Long): DataFrame = {
-    require(feedTag.matches("[A-Za-z0-9_-]+"),
-      s"feedTag must be path-safe, got '$feedTag'")
     val base = ivfIndex(spark, sfDir)
-    val gen = ivfGenDir(base, feedTag) _
-    val prev = if (batchId == 0L) base else gen(batchId - 1)
-    require(ivfPostingsDone(prev),
-      s"postings chain broken before batch $batchId: $prev incomplete")
-    val out = gen(batchId)
-    // same lock as ivfIndex/ivfIndexMerge/ivfIndexForget: two
-    // concurrent calls for the same (feedTag, batchId) must not race
-    // between the done-check and the generation write
-    synchronized {
-      if (!ivfPostingsDone(out)) {
+    val out = Generations.fold(base, ivfFoldParts, feedTag, batchId) {
+      (prev, tmp) =>
         val cents = spark.read.parquet(s"$base/centroids")
         spark.read.parquet(s"$prev/postings")
           .union(assignNearest(batch, cents)
             .select(col("vec_id"), col("v"), col("bucket")))
-          .write.mode("overwrite").parquet(s"$out/postings")
-      }
+          .write.parquet(s"$tmp/postings")
     }
     Canon.canonicalize(
       probeIvfIndexTables(spark.read.parquet(s"$base/centroids"),
@@ -3348,8 +3284,8 @@ object VectorOps {
 
   /** Retire old postings generations — the Generations contract. */
   def ivfGc(sfDir: String, feedTag: String, keepLast: Int): Seq[Long] =
-    graft.io.Generations.gc(ivfFoldBaseDir(sfDir), feedTag, keepLast,
-      ivfPostingsDone)
+    Generations.gc(ivfFoldBaseDir(sfDir), feedTag, keepLast,
+      Artifacts.complete(_, ivfFoldParts))
 
   /** Gate-batch definition constants, baked into [[ivfGateTag]] so a
     * persisted gate chain self-invalidates when the batch definition
@@ -3951,14 +3887,9 @@ object VectorOps {
 
   // ---- streaming Gram fold (the admission-fold family, numerics arm) --
 
-  private[graft] def pcaBaseDir(sfDir: String): String = {
-    val fp = graft.io.Fingerprint.ofPath(s"$sfDir/embeddings.parquet")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    s"target/pca_index/${tag}_d${pcaDim}_s${pcaScale}_$fp"
-  }
-
-  private def gramDone(dir: String): Boolean =
-    new java.io.File(s"$dir/_SUCCESS").exists()
+  private[graft] def pcaBaseDir(sfDir: String): String =
+    Artifacts.path("pca_index", sfDir, "embeddings.parquet",
+      s"d${pcaDim}_s$pcaScale")
 
   /** Gram rows ↔ driver arrays. The artifact stores (i, j, m) plus the
     * certificate counters as constant columns — 4096 rows, KB-sized at
@@ -3980,27 +3911,20 @@ object VectorOps {
     (g, rows.head.getLong(3), rows.head.getLong(4))
   }
 
-  /** Build-or-reuse the PERSISTED corpus Gram (SUCCESS-gated artifact
-    * tier — the [[SketchOps.hllIndex]] discipline).
+  /** Build-or-reuse the PERSISTED corpus Gram (the
+    * [[SketchOps.hllIndex]] discipline).
     */
   def pcaIndex(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val dir = pcaBaseDir(sfDir)
-      if (!gramDone(dir)) {
-        val (g, n, maxq) = pcaGram(spark, embeddings(spark, sfDir))
-        gramToDf(spark, g, n, maxq).write.mode("overwrite").parquet(dir)
-      }
-      spark.read.parquet(dir)
+    Artifacts.frame(spark, pcaBaseDir(sfDir)) {
+      val (g, n, maxq) = pcaGram(spark, embeddings(spark, sfDir))
+      gramToDf(spark, g, n, maxq)
     }
-
-  private[ext] def pcaGenDir(base: String, feedTag: String)(
-      id: Long): String = s"${base}__feed_$feedTag/g$id"
 
   /** STREAMING GRAM FOLD — each micro-batch's Gram ADDS onto the
     * running artifact (exact integers: fold ≡ from-scratch retrain on
     * corpus ∪ all batches, the strongest stream≡batch law in the
-    * library — same algebra as [[pcaMerged]]). Generation dirs are
-    * SUCCESS-gated and chain-checked like every admission fold; the
+    * library — same algebra as [[pcaMerged]]). One
+    * [[Generations.fold]] per batch, like every admission fold; the
     * per-batch return row reports the folded eigenpair plus its cosine
     * against the base component — principal-axis DRIFT telemetry as
     * data streams in.
@@ -4008,23 +3932,16 @@ object VectorOps {
   def pcaFold(spark: SparkSession, sfDir: String, feedTag: String,
               batch: DataFrame, batchId: Long): DataFrame = {
     import spark.implicits._
-    require(feedTag.matches("[A-Za-z0-9_-]+"),
-      s"feedTag must be path-safe, got '$feedTag'")
     pcaIndex(spark, sfDir)
     val base = pcaBaseDir(sfDir)
-    val gen = pcaGenDir(base, feedTag) _
-    val prev = if (batchId == 0L) base else gen(batchId - 1)
-    require(gramDone(prev),
-      s"Gram chain broken before batch $batchId: $prev incomplete")
-    val out = gen(batchId)
-    if (!gramDone(out)) {
+    val out = Generations.fold(base, Nil, feedTag, batchId) { (prev, tmp) =>
       val (pg, pn, pmax) = dfToGram(spark.read.parquet(prev))
       val (bg, bn, bmax) = pcaGram(spark, batch)
       val g = Array.tabulate(pcaDim * pcaDim)(k => pg(k) + bg(k))
       val n = pn + bn
       val maxq = math.max(pmax, bmax)
       pcaCertify(n, maxq)
-      gramToDf(spark, g, n, maxq).write.mode("overwrite").parquet(out)
+      gramToDf(spark, g, n, maxq).write.parquet(tmp)
     }
     val (g, n, _) = dfToGram(spark.read.parquet(out))
     val (g0, _, _) = dfToGram(spark.read.parquet(base))
@@ -4039,16 +3956,14 @@ object VectorOps {
       .toDF("batch_id", "n_vecs", "lam", "cos_base"))
   }
 
-  /** Retire old Gram generations — the [[graft.io.Generations]]
-    * retention contract.
-    */
+  /** Retire old Gram generations — the [[Generations]] contract. */
   def pcaGc(sfDir: String, feedTag: String, keepLast: Int): Seq[Long] =
-    graft.io.Generations.gc(pcaBaseDir(sfDir), feedTag, keepLast,
-      gramDone)
+    Generations.gc(pcaBaseDir(sfDir), feedTag, keepLast,
+      Artifacts.complete(_))
 
   /** Gate-batch definition constants, baked into [[pcaGateTag]] so a
     * persisted gate chain self-invalidates when the batch definition
-    * changes (stale SUCCESS-gated g0/g1 Grams would otherwise keep
+    * changes (stale published g0/g1 Grams would otherwise keep
     * serving the old chain across code edits until target/ is cleaned
     * by hand — the [[SketchOps.hllGateTag]] discipline).
     */
@@ -4085,7 +4000,7 @@ object VectorOps {
     val rows = (0 to 1).map { b =>
       pcaFold(spark, sfDir, pcaGateTag, pcaGateBatch(spark, sfDir, b),
         b.toLong) // drive the chain (and its requires)
-      val gen = pcaGenDir(pcaBaseDir(sfDir), pcaGateTag)(b.toLong)
+      val gen = Generations.genDir(pcaBaseDir(sfDir), pcaGateTag, b.toLong)
       val (g, _, _) = dfToGram(spark.read.parquet(gen))
       val w = dominantVec(g)
       val (norm, ray) = rayleighOf(g, w)

@@ -25,29 +25,22 @@ import graft.ops.Canon
   * table while results stay correct, the classic invisible 50× at
   * scale.
   *
-  * The partitioned copy lands once under target/dpp (`_SUCCESS`-gated,
-  * fingerprint-keyed), the [[Bucketing]] artifact discipline.
+  * The partitioned copy lands once under target/dpp (published through
+  * the [[Artifacts]] store, fingerprint-keyed).
   */
 object Partitioned {
 
-  private def tag(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-
   private def baseDir(sfDir: String): String = {
     val fp = Fingerprint.ofPath(s"$sfDir/events.parquet")
-    new File(s"${Artifacts.root}/dpp/events_${tag(sfDir)}_$fp")
+    new File(s"${Artifacts.root}/dpp/events_${Artifacts.tag(sfDir)}_$fp")
       .getAbsolutePath
   }
 
   /** Events re-laid-out partitioned by event_type. */
   def eventsByType(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val dir = baseDir(sfDir)
-      if (!new File(s"$dir/_SUCCESS").exists())
-        graft.ext.EventOps.events(spark, sfDir)
-          .write.mode("overwrite").partitionBy("event_type").parquet(dir)
-      spark.read.parquet(dir)
-    }
+    spark.read.parquet(Artifacts.getOrBuild(baseDir(sfDir))(
+      graft.ext.EventOps.events(spark, sfDir)
+        .write.partitionBy("event_type").parquet(_)))
 
   /** The dimension as a REAL datasource scan (written beside the
     * fact): a `Seq.toDF` dim is a LocalRelation whose filter constant-
@@ -57,15 +50,11 @@ object Partitioned {
     * production shape (the dim lives in the lakehouse, not in the
     * driver).
     */
-  def typeDim(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      import spark.implicits._
-      val dir = s"${baseDir(sfDir)}__dim"
-      if (!new File(s"$dir/_SUCCESS").exists())
-        typeCategories.toDF("event_type", "category")
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir)
-    }
+  def typeDim(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    Artifacts.frame(spark, s"${baseDir(sfDir)}__dim")(
+      typeCategories.toDF("event_type", "category").coalesce(1))
+  }
 
   /** The event-type dimension with the category rollup the filter
     * rides. Tiny and broadcastable — exactly the DPP-qualifying shape.
@@ -101,15 +90,11 @@ object Partitioned {
   /** The dim as a real datasource scan (same LocalRelation trap as
     * [[typeDim]]: a constant-folded dim leaves nothing for the
     * PartitionPruning rule to key on). */
-  def flagDim(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      import spark.implicits._
-      val dir = s"${baseDir(sfDir)}__flagdim"
-      if (!new File(s"$dir/_SUCCESS").exists())
-        flagClasses.toDF("l_returnflag", "flag_class")
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir)
-    }
+  def flagDim(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    Artifacts.frame(spark, s"${baseDir(sfDir)}__flagdim")(
+      flagClasses.toDF("l_returnflag", "flag_class").coalesce(1))
+  }
 
   /** THE SECOND DPP SHAPE — fact-to-fact over the COMBINED layout
     * ([[Bucketing.bucketedPartitioned]]): lineitem partitioned by

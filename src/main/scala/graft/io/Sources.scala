@@ -21,16 +21,6 @@ object Sources {
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", true).schema(schema).csv(path)
 
-  /** JSON-records source with declared schema — the landing format of the
-    * REST extract (reference S1, transform_utils.py:62–75 returns a list of
-    * dicts fed to createDataFrame).
-    */
-  def jsonRecords(spark: SparkSession, json: Seq[String],
-                  schema: StructType): DataFrame = {
-    import spark.implicits._
-    spark.read.schema(schema).json(spark.createDataset(json))
-  }
-
   /** JSON-lines staging directory with declared schema — the read side of
     * the incremental paged landing (Ingestion streams each REST page to a
     * `page-N.json` file as it arrives; this reads them back without the

@@ -66,14 +66,11 @@ object CorpusChain {
       "dp_release" ->
         ((s, d) => graft.ext.GovernanceOps.dpReleaseAccounted(s, d)))
 
-  private def sfTag(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-
   /** Manifest root for a dataset — LATEST and the manifest JSONs live
     * here; each run's artifacts live under `versions/<tag>/`.
     */
   def chainRoot(sfDir: String): String =
-    s"${Artifacts.root}/corpus_chain/${sfTag(sfDir)}"
+    s"${Artifacts.root}/corpus_chain/${Artifacts.tag(sfDir)}"
 
   /** Run the chain and PUBLISH: write every artifact under this run's
     * version directory, fingerprint them, then commit the manifest +

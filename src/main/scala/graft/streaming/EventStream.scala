@@ -302,7 +302,7 @@ object EventStream {
     * beside [[lshProbeToParquet]] (near-dup) the way the batch ledger
     * completes it beside the LSH index. Verdicts land in batch-id-keyed
     * overwrite partitions (the replay discipline above); the ledger
-    * merge itself is SUCCESS-gated, so probe, merge, and sink are each
+    * merge itself is store-published, so probe, merge, and sink are each
     * idempotent under foreachBatch's at-least-once replay. `feedTag`
     * must be 1:1 with `checkpointDir` — batch ids only mean anything
     * relative to one checkpoint. Stream ≡ one-shot whole-feed probe
@@ -335,7 +335,7 @@ object EventStream {
     * be 1:1 with `checkpointDir` (batch ids only mean anything
     * relative to one checkpoint); probe, merge and sink are each
     * idempotent under foreachBatch's at-least-once replay
-    * (SUCCESS-gated generations, per-batch overwrite partitions).
+    * (store-published generations, per-batch overwrite partitions).
     * Stream ≡ batch-mode fold and the cross-batch near-dup catch are
     * spec-asserted across a stop/restart (LshAdmitSpec).
     */
@@ -362,7 +362,7 @@ object EventStream {
     * [[lshAdmitToParquet]] (near-dup). State is 256 registers per
     * lang regardless of feed length; probe, merge and sink are each
     * idempotent under foreachBatch's at-least-once replay
-    * (SUCCESS-gated generations, per-batch overwrite partitions).
+    * (store-published generations, per-batch overwrite partitions).
     * `feedTag` must be 1:1 with `checkpointDir`.
     */
   def hllFoldToParquet(docs: DataFrame, sfDir: String, feedTag: String,

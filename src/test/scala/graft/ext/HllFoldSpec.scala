@@ -49,7 +49,7 @@ class HllFoldSpec extends SparkSpec {
 
     // chained generation 1 ≡ from-scratch sketch of corpus ∪ feed
     val gen1 = spark.read.parquet(
-      SketchOps.hllGenDir(SketchOps.hllBaseDir(sfDir), feed)(1L))
+      graft.io.Generations.genDir(SketchOps.hllBaseDir(sfDir), feed, 1L))
       .as[(String, Int, Int)].collect().toSet
     val unioned = SketchOps.hllRegisters(
       TextOps.documents(spark, sfDir).select("doc_id", "lang", "text")

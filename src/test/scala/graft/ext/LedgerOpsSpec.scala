@@ -149,7 +149,7 @@ class LedgerOpsSpec extends SparkSpec {
       v._3 == 900000001L && v._4 == 1L), "cross-batch dup missed")
     // chained ledger ≡ ONE merge of the concatenated feed
     val chained =
-      LedgerOps.feedGenDir(LedgerOps.shaLedger(spark, sfDir), feed)(1L)
+      graft.io.Generations.genDir(LedgerOps.shaLedger(spark, sfDir), feed, 1L)
     val oneMerge = LedgerOps.shaLedgerMerge(spark,
       LedgerOps.shaLedger(spark, sfDir), whole, s"$feed-all")
     for (t <- Seq("rows", "groups"))

@@ -70,7 +70,7 @@ class LshAdmitSpec extends SparkSpec {
 
     // chained generation 1 ≡ ONE merge of all admitted docs onto base
     val base = DedupOps.lshIndexDir(sfDir)
-    val chained = DedupOps.lshFeedGenDir(base, feed)(1L)
+    val chained = graft.io.Generations.genDir(base, feed, 1L)
     val admitted = (batches._1 ++ batches._2)
       .filter(d => (v0 ++ v1).get(d._1).exists(_._2))
       .toDF("doc_id", "text")
