@@ -3,8 +3,13 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.types.{Decimal, DecimalType}
 
+import scala.collection.mutable
+
+import graft.functions.CosineSimilarity
 import graft.io.{Artifacts, Generations, Tables}
 import graft.ops.Canon
 import graft.plans.TopK
@@ -474,25 +479,6 @@ object VectorOps {
   val ivfCentroids = 16
   val ivfIters = 3
 
-  /** Trained coarse-quantizer centroids: deterministic spherical k-means.
-    * Seed = the first `c` vectors by vec_id (seedless, reproducible), then
-    * `iters` Lloyd rounds: assign every vector to its nearest centroid by
-    * cosine, recompute each centroid as the element-wise SUM of its
-    * members. Sum, not mean, deliberately: cosine is invariant to
-    * positive scaling, so the sum centroid assigns identically to the
-    * mean — and unlike a decimal DIVISION (whose result scale/rounding
-    * rules differ per engine) a decimal SUM of the members is exact
-    * integer arithmetic both engines reproduce bit-identically, which is
-    * what lets the ANN query carry a full DuckDB oracle. The decimal
-    * accumulation also makes training independent of partial-aggregation
-    * order (double sums are not). Empty clusters keep their previous
-    * centroid.
-    *
-    * The per-round collect is C rows (16 × dim doubles) — the standard
-    * k-means driver sync point, NOT a driver-side compute loop: at 100 TB
-    * the assignment/sum passes stay fully distributed and only the tiny
-    * centroid table round-trips.
-    */
   /** Nearest-centroid assignment of every vector (argmax cosine, ties to
     * the lowest cent_id) as an AGGREGATION, not a window: the N×C scored
     * cross join reduces map-side (partial max_by) to one row per vector
@@ -512,34 +498,134 @@ object VectorOps {
           struct(col("cent_cos"), (-col("cent_id")).as("tb"))).as("bucket"),
         first("v").as("v")) // constant within the group
 
+  /** The index in `0 until n` whose score comes first — greatest if
+    * `greatest`, else least — in Spark's SQL double order (NaN above
+    * every number, -0.0 = 0.0), ties to the lowest index: the
+    * `max_by`/`min_by` over (score, cent_id) of [[assignNearest]] and
+    * [[pqEncode]], with the candidates in cent_id order. `n` ≥ 1.
+    */
+  private def bestIndex(n: Int, greatest: Boolean)(score: Int => Double): Int = {
+    var best = 0
+    var bestScore = score(0)
+    var i = 1
+    while (i < n) {
+      val s = score(i)
+      val c = SQLOrderingUtil.compareDoubles(s, bestScore)
+      if (if (greatest) c > 0 else c < 0) { best = i; bestScore = s }
+      i += 1
+    }
+    best
+  }
+
+  /** Exact partials of one Lloyd update, keyed by cell: the member count
+    * and, per position, the sum of `Decimal(x)` changed to DECIMAL(30,15)
+    * — what `sum(CAST(x AS DECIMAL(30,15)))` accumulates. Decimal
+    * addition is exact, so neither the partitioning nor the merge order
+    * can move a bit, and a partial holds cells × dim values whatever the
+    * corpus size.
+    */
+  private final class CellSums extends Serializable {
+    private val sums = mutable.LongMap.empty[Array[java.math.BigDecimal]]
+    private val counts = mutable.LongMap.empty[Long]
+
+    /** Fold `v(from until from + len)` into `cell`. */
+    def add(cell: Long, v: Array[Double], from: Int, len: Int): Unit = {
+      val s = sums.getOrElseUpdate(cell,
+        Array.fill(len)(java.math.BigDecimal.ZERO))
+      require(s.length == len,
+        s"cell $cell: a member of length $len, the others ${s.length}")
+      var p = 0
+      while (p < len) {
+        val d = Decimal(v(from + p))
+        if (!d.changePrecision(30, 15))
+          throw new ArithmeticException(s"${v(from + p)} overflows DECIMAL(30,15)")
+        s(p) = s(p).add(d.toJavaBigDecimal)
+        p += 1
+      }
+      counts(cell) = counts.getOrElse(cell, 0L) + 1
+    }
+
+    def merge(o: CellSums): CellSums = {
+      o.sums.foreachEntry { (cell, s) =>
+        sums.get(cell) match {
+          case Some(t) => t.indices.foreach(p => t(p) = t(p).add(s(p)))
+          case None => sums(cell) = s
+        }
+        counts(cell) = counts.getOrElse(cell, 0L) + o.counts(cell)
+      }
+      this
+    }
+
+    /** The cells that have members, ascending. */
+    def cells: Seq[Long] = sums.keys.toSeq.sorted
+
+    /** A cell's sums as `CAST(sum AS DOUBLE)`; None for an empty cell. */
+    def sum(cell: Long): Option[Array[Double]] =
+      sums.get(cell).map(_.map(Decimal(_).toDouble))
+
+    /** [[sum]] divided by the member count, as
+      * `CAST(sum AS DOUBLE) / CAST(count AS DOUBLE)`. */
+    def mean(cell: Long): Option[Array[Double]] =
+      sum(cell).map { s => val n = counts(cell).toDouble; s.map(_ / n) }
+  }
+
+  /** One distributed pass: every partition folds its rows into one
+    * [[CellSums]] and a tree merge combines the partials — one job, and
+    * the driver receives cells × dim values.
+    */
+  private def cellSums(rows: DataFrame)
+                      (fold: (CellSums, InternalRow) => Unit): CellSums =
+    rows.queryExecution.toRdd.treeAggregate(new CellSums)(
+      (s, r) => { fold(s, r); s }, _.merge(_))
+
+  /** Seed rows (vec_id < `n`, by vec_id) of a (vec_id, v) frame. */
+  private def seedVectors(e: DataFrame, n: Int): Array[(Long, Array[Double])] = {
+    import e.sparkSession.implicits._
+    e.filter(col("vec_id") < n).select(col("vec_id"), col("v"))
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+  }
+
+  /** Trained coarse-quantizer centroids: deterministic spherical k-means.
+    * Seed = the first `c` vectors by vec_id (seedless, reproducible), then
+    * `iters` Lloyd rounds: assign every vector to its nearest centroid by
+    * cosine, recompute each centroid as the element-wise SUM of its
+    * members. Sum, not mean, deliberately: cosine is invariant to
+    * positive scaling, so the sum centroid assigns identically to the
+    * mean — and unlike a decimal DIVISION (whose result scale/rounding
+    * rules differ per engine) a decimal SUM of the members is exact
+    * integer arithmetic both engines reproduce bit-identically, which is
+    * what lets the ANN query carry a full DuckDB oracle. The decimal
+    * accumulation also makes training independent of partial-aggregation
+    * order (double sums are not). Empty clusters keep their previous
+    * centroid.
+    *
+    * Each round is ONE partition pass: the C centroids are broadcast,
+    * every partition assigns its vectors with [[assignNearest]]'s kernel
+    * and folds them into [[CellSums]] (C×d exact partials), one tree
+    * merge combines the partials, and the driver converts the C×d sums
+    * to doubles. One job per round; the corpus never shuffles and the
+    * driver never holds more than the centroid table, so the round
+    * scales with the partition count, not with N.
+    */
   private[ext] def trainedCentroids(e: DataFrame, c: Int = ivfCentroids,
                                     iters: Int = ivfIters): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    var cents = e.filter(col("vec_id") < c)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    var round = 0
-    while (round < iters) {
-      val assigned = assignNearest(e, cents)
-        .select(col("bucket").as("cent_id"), col("v"))
-      val sums = assigned
-        .select(col("cent_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cent_id", "pos")
-        .agg(sum(col("x").cast(DecimalType(30, 15)))
-          .cast("double").as("m"))
-        .groupBy("cent_id")
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("sum_v"))
-      val next = cents.select(col("cent_id"), col("cv").as("prev"))
-        .join(sums, Seq("cent_id"), "left")
-        .select(col("cent_id"),
-          coalesce(col("sum_v"), col("prev")).as("cv"))
-      val rows = next.as[(Long, Seq[Double])].collect().sortBy(_._1)
-      cents = spark.createDataset(rows).toDF("cent_id", "cv")
-      round += 1
+    val seed = seedVectors(e, c)
+    var cents = seed.map(_._2)
+    for (_ <- 0 until iters if cents.nonEmpty) {
+      val bc = spark.sparkContext.broadcast(cents)
+      val sums = try cellSums(e.select(col("v"))) { (s, r) =>
+        if (!r.isNullAt(0)) {
+          val v = r.getArray(0).toDoubleArray()
+          val cs = bc.value
+          s.add(bestIndex(cs.length, greatest = true)(
+            i => CosineSimilarity.of(cs(i), v)), v, 0, v.length)
+        }
+      } finally bc.destroy()
+      cents = cents.indices.map(i => sums.sum(i).getOrElse(cents(i))).toArray
     }
-    cents
+    seed.map(_._1).zip(cents.map(_.toSeq)).toSeq.toDF("cent_id", "cv")
   }
 
   /** IVF-style ANN: bucket every vector under its nearest coarse centroid
@@ -1868,51 +1954,61 @@ object VectorOps {
           j => slice(col("v"), j * col("sub") + 1, col("sub"))))
         .as(Seq("j", "sv")))
 
-  /** All [[pqM]] sub-quantizers trained SIMULTANEOUSLY — everything is
-    * keyed by (j, cent_id), so one assignment pass and one mean update
-    * per Lloyd round covers every subspace (m separate loops would
-    * multiply the round count by m for no reason). Assignment is L2
-    * argmin with the (d ASC, cent_id ASC) tie-break; the update is the
-    * exact decimal-sum mean (sum and count are order-free, the one
-    * double division is IEEE-identical in both engines); empty cells
-    * keep their previous centroid. Driver sync per round: m·k rows —
-    * the k-means centroid pattern.
+  /** All [[pqM]] sub-quantizers trained SIMULTANEOUSLY — each vector is
+    * split into its [[pqM]] sub-vectors (see [[subVectors]]), so one
+    * assignment pass and one mean update per Lloyd round covers every
+    * subspace (m separate loops would multiply the round count by m for
+    * no reason). Assignment is [[pqEncode]]'s L2 argmin with the
+    * (d ASC, cent_id ASC) tie-break; the update is the exact decimal-sum
+    * mean (sum and count are order-free, the one double division is
+    * IEEE-identical in both engines); empty cells keep their previous
+    * centroid. Each round is one partition pass over the vectors with the
+    * m·k codebook broadcast and m·k [[CellSums]] partials tree-merged —
+    * the [[trainedCentroids]] round.
     */
   private[ext] def trainedPqCodebooks(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val sub = subVectors(e)
-    var cents = sub.filter(col("vec_id") < pqK)
-      .select(col("j"), col("vec_id").as("cent_id"), col("sv").as("cv"))
-    var round = 0
-    while (round < pqIters) {
-      val assigned = sub.join(broadcast(cents), Seq("j"))
-        .withColumn("d", l2(col("sv"), col("cv")))
-        .groupBy("vec_id", "j")
-        .agg(min_by(struct(col("cent_id"), col("sv")),
-          struct(col("d"), col("cent_id"))).as("s"))
-        .select(col("j"), col("s.cent_id").as("cent_id"),
-          col("s.sv").as("sv"))
-      val means = assigned
-        .select(col("j"), col("cent_id"),
-          posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("j", "cent_id", "pos")
-        .agg((sum(col("x").cast(DecimalType(30, 15))).cast("double") /
-          count(lit(1)).cast("double")).as("m"))
-        .groupBy("j", "cent_id")
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("mv"))
-      val next = cents.select(col("j"), col("cent_id"), col("cv").as("prev"))
-        .join(means, Seq("j", "cent_id"), "left")
-        .select(col("j"), col("cent_id"),
-          coalesce(col("mv"), col("prev")).as("cv"))
-      val rows = next.as[(Int, Long, Seq[Double])].collect()
-        .sortBy(r => (r._1, r._2))
-      cents = spark.createDataset(rows).toDF("j", "cent_id", "cv")
-      round += 1
+    val seed = seedVectors(e, pqK)
+    val (m, k) = (pqM, seed.length)
+    // books(j)(i): entry i of sub-quantizer j, seeded with seed i's slice j
+    var books = Array.tabulate(m, k) { (j, i) =>
+      val v = seed(i)._2; val sub = v.length / m
+      v.slice(j * sub, (j + 1) * sub)
     }
-    cents
+    for (_ <- 0 until pqIters if k > 0) {
+      val bc = spark.sparkContext.broadcast(books)
+      val sums = try cellSums(e.select(col("v"))) { (s, r) =>
+        if (!r.isNullAt(0)) {
+          val v = r.getArray(0).toDoubleArray()
+          val sub = v.length / m
+          var j = 0
+          while (j < m) {
+            val book = bc.value(j)
+            val near = bestIndex(k, greatest = false)(
+              i => l2At(book(i), v, j * sub))
+            s.add(j * k + near, v, j * sub, sub)
+            j += 1
+          }
+        }
+      } finally bc.destroy()
+      books = Array.tabulate(m, k)((j, i) =>
+        sums.mean(j * k + i).getOrElse(books(j)(i)))
+    }
+    (for (j <- 0 until m; i <- 0 until k)
+      yield (j, seed(i)._1, books(j)(i).toSeq)).toDF("j", "cent_id", "cv")
+  }
+
+  /** [[l2]] of `c` and the slice of `v` at `from`: the same left fold. */
+  private def l2At(c: Array[Double], v: Array[Double], from: Int): Double = {
+    var d = 0.0
+    var p = 0
+    while (p < c.length) {
+      val x = v(from + p); val y = c(p)
+      d = d + (x - y) * (x - y)
+      p += 1
+    }
+    d
   }
 
   /** IVF-PQ ANN — the compressed tier past [[annIvfSq8]] (FAISS
@@ -2390,19 +2486,21 @@ object VectorOps {
     * the r14 seam that lets [[annIvfPqr]]/[[annPqrRerankSweep]] run
     * [[assignNearest]]'s corpus × C pass ONCE for the candidate set
     * and the residual means (guide §2.4: don't compute the same
-    * subtree twice). DECIMAL sums are order-independent, so means off
-    * a persisted assignment are bit-identical to the recomputed path.
+    * subtree twice). One [[cellSums]] pass (C×d exact partials per
+    * partition); DECIMAL sums are order-independent, so means off a
+    * persisted assignment are bit-identical to the recomputed path.
+    * Eager: returns the C driver-held rows (bucket, mv) as a local frame.
     */
-  private def bucketMeansOf(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("bucket"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy("bucket", "pos")
-      .agg((sum(col("x").cast(DecimalType(30, 15))).cast("double") /
-        count(lit(1)).cast("double")).as("m"))
-      .groupBy("bucket")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("mv"))
+  private def bucketMeansOf(assigned: DataFrame): DataFrame = {
+    import assigned.sparkSession.implicits._
+    val sums = cellSums(assigned.select(col("bucket"), col("v"))) { (s, r) =>
+      if (!r.isNullAt(1)) {
+        val v = r.getArray(1).toDoubleArray()
+        s.add(r.getLong(0), v, 0, v.length)
+      }
+    }
+    sums.cells.map(b => (b, sums.mean(b).get.toSeq)).toDF("bucket", "mv")
+  }
 
   /** Coarse residuals r = v − mean_bucket(v), bucket kept:
     * (vec_id, bucket, v≔r). A narrow broadcast-join map — the corpus
@@ -2436,8 +2534,8 @@ object VectorOps {
     * caller (by-name — never constructed on the warm memo/artifact
     * path). The measured cold path ([[buildIvfPqIndex]]) passes a
     * PERSISTED residual frame shared with the code-table encode, so
-    * the corpus × C assignment and the bucket-means aggregation run
-    * once per build instead of once per Lloyd round per consumer. */
+    * the corpus × C assignment runs once per build instead of once per
+    * Lloyd round per consumer. */
   private def cachedPqrCodebooksFrom(spark: SparkSession, sfDir: String,
                                      res: => DataFrame): DataFrame =
     codebookFrame(spark,
@@ -2561,12 +2659,10 @@ object VectorOps {
     // r14: ONE corpus × C assignment pass, shared by the candidate set
     // and the residual bucket means (was two assignNearest subtrees)
     val assigned = assignNearest(e, centroids).persist()
-    // r15 (§2.4): materialize the bucket means ONCE — pqrCoarse builds
-    // THREE broadcasts off mu (pcd, cnb, bdt), each an independent job
-    // that otherwise re-runs the corpus × dim means aggregation racing
-    // on the unmaterialized assignment cache
-    val mu = bucketMeansOf(assigned).persist()
-    mu.count()
+    // the bucket means are one eager pass into C local rows, so
+    // pqrCoarse's THREE broadcasts off mu (pcd, cnb, bdt) never re-run
+    // the corpus × dim means aggregation
+    val mu = bucketMeansOf(assigned)
     val codes = cachedPqCodes(spark, sfDir, pqrCodesName)(pqEncode(
       residualVecsOf(assigned, mu)
         .select(col("vec_id"), col("v")), codebooks))
@@ -2574,7 +2670,7 @@ object VectorOps {
       Canon.canonicalize(pqRescoreTail(e,
         pqrCoarse(e, mu, pqrCand(assigned, e, centroids, nprobe),
           codebooks, codes))),
-      e, assigned, mu)
+      e, assigned)
   }
 
   /** THE RESIDUAL WIDTH CURVE — [[annPqRerankSweep]]'s twin over the
@@ -2592,10 +2688,9 @@ object VectorOps {
     val codebooks = cachedPqrCodebooks(spark, sfDir, e, centroids)
     // r14: shared assignment pass (see annIvfPqr)
     val assigned = assignNearest(e, centroids).persist()
-    // r15: one materialized means pass for pqrCoarse's three broadcast
-    // builds (see annIvfPqr)
-    val mu = bucketMeansOf(assigned).persist()
-    mu.count()
+    // one eager means pass for pqrCoarse's three broadcast builds (see
+    // annIvfPqr)
+    val mu = bucketMeansOf(assigned)
     val codes = cachedPqCodes(spark, sfDir, pqrCodesName)(pqEncode(
       residualVecsOf(assigned, mu)
         .select(col("vec_id"), col("v")), codebooks))
@@ -2603,7 +2698,7 @@ object VectorOps {
       pqrCoarse(e, mu, pqrCand(assigned, e, centroids, 4), codebooks,
         codes).persist()
     val out = pqSweepOverCoarse(spark, sfDir, e, coarse)
-    assigned.unpersist(false); mu.unpersist(false)
+    assigned.unpersist(false)
     out
   }
 
@@ -2616,55 +2711,75 @@ object VectorOps {
     * cost the warm probe queries deliberately exclude. Returns the
     * artifact row counts (the two corpus-sized code tables read back),
     * so the caller's count() action has a frame to consume.
+    *
+    * Past `e`, the raw-PQ arm (codebooks + code table over the vectors)
+    * and the residual arm (centroids → assignment → residual codebooks +
+    * code table) share nothing, so they run on two driver threads and
+    * one arm's jobs fill the executor slots the other's artifact writes
+    * and reads leave idle. Every Lloyd round in either arm is one
+    * partition pass with tree-merged C×d partials (see
+    * [[trainedCentroids]]), so training adds one job per round and the
+    * corpus never shuffles for it. Training is bit-deterministic
+    * regardless of interleaving (TrainedArtifactPersistSpec pins
+    * build ≡ lazy-probe artifacts). If an arm throws, the other arm's
+    * running jobs are cancelled and the build waits for it before
+    * rethrowing, so no job of the build outlives the call and nothing is
+    * published after it; every frame the build persisted is released.
     */
   private[graft] def buildIvfPqIndex(spark: SparkSession,
                                      sfDir: String): DataFrame = {
     import spark.implicits._
+    import java.util.concurrent.{Callable, ExecutionException,
+      ExecutorCompletionService, Executors}
+    val sc = spark.sparkContext
+    val tag = s"ivf-pq-build-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(2)
+    val arms = new ExecutorCompletionService[Long](pool)
+    def arm(body: => Long) = arms.submit(new Callable[Long] {
+      def call(): Long = {
+        sc.addJobTag(tag)
+        try body finally sc.removeJobTag(tag)
+      }
+    })
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .persist()
-    e.count() // both arms' first jobs otherwise race on the cache
-    // r15 (guide §2.6): past e, the raw-PQ arm (codebooks + code table
-    // over the vectors) and the residual arm (centroids → assignment →
-    // residual codebooks + code table) share NOTHING — two driver
-    // threads overlap their inherently sequential Lloyd collects and
-    // artifact write/read actions, so one arm's jobs back-fill the
-    // executor slots the other's driver sync leaves idle. Each arm's
-    // job sequence, training arithmetic and artifact dir are unchanged
-    // (training is bit-deterministic regardless of interleaving;
-    // TrainedArtifactPersistSpec pins build ≡ lazy-probe artifacts).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
-      val rawF = pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = {
-          val pqCb = cachedPqCodebooks(spark, sfDir, e)
-          cachedPqCodes(spark, sfDir, pqCodesName)(
-            pqEncode(e, pqCb)).count()
-        }
-      })
-      val resF = pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = {
-          val centroids =
-            cachedCentroids(spark, sfDir, e).toDF("cent_id", "cv")
-          // ONE corpus × C assignment and ONE bucket-means pass feed
-          // BOTH the residual codebook training (whose Lloyd rounds
-          // otherwise recompute them per iteration — the residual frame
-          // was an unpersisted subtree) and the code-table encode (§2.4).
-          val assigned = assignNearest(e, centroids).persist()
+      e.count() // both arms' first jobs otherwise race on the cache
+      val rawF = arm {
+        val pqCb = cachedPqCodebooks(spark, sfDir, e)
+        cachedPqCodes(spark, sfDir, pqCodesName)(pqEncode(e, pqCb)).count()
+      }
+      val resF = arm {
+        val centroids =
+          cachedCentroids(spark, sfDir, e).toDF("cent_id", "cv")
+        // ONE corpus × C assignment and ONE bucket-means pass feed BOTH
+        // the residual codebook training and the code-table encode (§2.4)
+        val assigned = assignNearest(e, centroids).persist()
+        try {
           val res = residualVecsOf(assigned, bucketMeansOf(assigned))
             .select(col("vec_id"), col("v")).persist()
-          val pqrCb = cachedPqrCodebooksFrom(spark, sfDir, res)
-          val n = cachedPqCodes(spark, sfDir, pqrCodesName)(
-            pqEncode(res, pqrCb)).count()
-          res.unpersist(false); assigned.unpersist(false)
-          n
-        }
-      })
-      val out = Seq((rawF.get(), resF.get()))
-        .toDF("n_pq_codes", "n_pqr_codes")
+          try {
+            val pqrCb = cachedPqrCodebooksFrom(spark, sfDir, res)
+            cachedPqCodes(spark, sfDir, pqrCodesName)(
+              pqEncode(res, pqrCb)).count()
+          } finally { res.unpersist(false); () }
+        } finally { assigned.unpersist(false); () }
+      }
+      // the first arm to fail cancels the other's running jobs; the
+      // build returns or throws only once both arms have ended
+      val first = arms.take()
+      if (scala.util.Try(first.get()).isFailure) sc.cancelJobsWithTag(tag)
+      arms.take()
+      try {
+        first.get() // the first failure, not the cancellation it caused
+        Seq((rawF.get(), resF.get())).toDF("n_pq_codes", "n_pqr_codes")
+      } catch { case x: ExecutionException => throw x.getCause }
+    } finally {
+      pool.shutdown()
       e.unpersist(false)
-      out
-    } finally { pool.shutdown(); () }
+      ()
+    }
   }
 
   /** Single-assignment candidates with bucket, oracle side. */
@@ -3199,11 +3314,12 @@ object VectorOps {
       val base = allVecs(spark, sfDir)
         .filter(vecSideLt(DedupOps.incrementalCorpusPermille))
         .persist()
-      trainedCentroids(base).write.parquet(s"$dir/centroids")
-      assignNearest(base, spark.read.parquet(s"$dir/centroids"))
-        .select(col("vec_id"), col("v"), col("bucket"))
-        .write.parquet(s"$dir/postings")
-      base.unpersist(false)
+      try {
+        trainedCentroids(base).write.parquet(s"$dir/centroids")
+        assignNearest(base, spark.read.parquet(s"$dir/centroids"))
+          .select(col("vec_id"), col("v"), col("bucket"))
+          .write.parquet(s"$dir/postings")
+      } finally { base.unpersist(false); () }
     }
 
   /** MERGE new vectors into a persisted IVF index: encode them with the

@@ -41,19 +41,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def prettyName: String = "cosine_similarity"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getDouble(i); val yi = y.getDouble(i)
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.of(a.asInstanceOf[ArrayData].toDoubleArray(),
+      b.asInstanceOf[ArrayData].toDoubleArray())
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
@@ -83,6 +73,20 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+  /** The kernel on two double arrays — the interpreted path, and the
+    * loop the generated code spells out. */
+  def of(x: Array[Double], y: Array[Double]): Double = {
+    val n = math.min(x.length, y.length)
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x(i); val yi = y(i)
+      dot += xi * yi; na += xi * xi; nb += yi * yi
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
   /** Column-API entry point. */
   def apply(a: Column, b: Column): Column =
     ColumnBridge.column(
