@@ -83,25 +83,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER: run the same bench against a real cluster
-    // manager (the Runner override; default stays local mode)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // bucketed fact scans emit per-bucket sort order (Bucketing writes
-      // exactly one file per bucket, which makes this safe) so fact-fact
-      // merge joins run sort-free as well as shuffle-free
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // the events fixture is TIMESTAMP(NANOS) parquet; its reader
-      // requires this mapping and fails loudly if unset (EventOps.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
 
     // r15: the ANN stored-index tier's BUILD cost as its own measured
     // bench row. Probe queries read the warm fingerprint-stamped
@@ -160,7 +142,7 @@ object Bench {
         val t0 = System.nanoTime()
         // modulo bounds the addend: a 100M-row sum of full-range hashes
         // overflows Long under ANSI mode
-        spark.range(0, 100000000L, 1, cpus.toInt)
+        spark.range(0, 100000000L, 1, Session.cpus)
           .select(fsum(xxhash64(col("id")) % 997)).head()
         (System.nanoTime() - t0) / 1e9
       }
@@ -217,12 +199,10 @@ object Bench {
     val results = queries.map { case (name, _) =>
       name -> median(perRun.map(_(name)))
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }
+    val qs = results.map { case (k, v) => s"${Json.str(k)}:$v" }
+      .mkString("{", ",", "}")
+    val errJson = errors
+      .map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // artifact_tier: whether telemetry/lifecycle queries read the
@@ -236,7 +216,7 @@ object Bench {
     // scan_input_mb] — the shuffle-volume telemetry beside each timing
     val bytesJson = results.map { case (k, _) =>
       val (r, w, in) = bytesMb.getOrElse(k, (0.0, 0.0, 0.0))
-      s"${q(k)}:[$r,$w,$in]"
+      s"${Json.str(k)}:[$r,$w,$in]"
     }.mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"runs":$runsN,"artifact_tier":${graft.io.Artifacts.sharedTier},"subset":$subsetJson,"bytes_mb":$bytesJson,"calib_sec":$calib,"sf":"$sfDir"}"""

@@ -79,26 +79,7 @@ object Runner {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val chain = args.drop(1).headOption.getOrElse("daily")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER lets the same chain run against a real
-    // cluster manager (the multi-node smoke: spark://host:7077);
-    // default stays the harness's local mode
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // bucketed fact scans emit per-bucket sort order (Bucketing writes
-      // exactly one file per bucket, which makes this safe) so fact-fact
-      // merge joins run sort-free as well as shuffle-free
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // the events fixture is TIMESTAMP(NANOS) parquet; its reader
-      // requires this mapping and fails loudly if unset (EventOps.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-runner")
 
     val daily: Seq[(String, () => Long)] = Seq(
       // feed pre-flight: the declarative contract check runs FIRST —

@@ -58,23 +58,6 @@ object StreamCrashDrill {
 
   private val corruptCol = "_corrupt_line"
 
-  private def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName(s"graft-stream-crash-$name")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // streaming state checkpoints must survive a SIGKILL: keep the
-      // default HDFS-backed store but commit every version (no async)
-      .config("spark.sql.streaming.minBatchesToRetain", "20")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Events fixture → ts-ordered jsonl chunks with injected corrupt
     * lines. Deterministic: same fixture → byte-identical chunks.
     */
@@ -267,7 +250,10 @@ object StreamCrashDrill {
       "usage: StreamCrashDrill <init|serve|check> <sfDir> <workDir> " +
         "[nChunks|feedIntervalMs]")
     val Array(phase, sfDir, work) = args.take(3)
-    val spark = session(phase)
+    val spark = Session(s"graft-stream-crash-$phase")
+    // streaming state checkpoints must survive a SIGKILL: keep the
+    // default HDFS-backed store but commit every version (no async)
+    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "20")
     val rc = phase match {
       case "init" =>
         init(spark, sfDir, work,

@@ -14,8 +14,8 @@ import graft.functions.{CosineSimilarity, HyperplaneBuckets,
   * `shingle_hashes(s, k[, distinct])`, `hyperplane_buckets(v)`), the
   * [[TopKRewriteRule]] optimizer rule (row_number-filter → sort-free
   * [[TopKPerKey]]), and the [[TopKStrategy]] planner strategy that plans
-  * it. Activate with `spark.sql.extensions=graft.plans.GraftExtensions`
-  * or pass to `SparkSession.builder.withExtensions`.
+  * it. [[graft.Session]] installs them; a session built elsewhere
+  * activates them with `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

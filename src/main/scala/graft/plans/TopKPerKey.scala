@@ -62,8 +62,8 @@ object TopKStrategy extends SparkStrategy {
       // prunes each INPUT partition to its local top-k per key before
       // the exchange, so the shuffle carries ≤ k·|local keys| rows —
       // without it, vanilla Spark's WindowGroupLimit partial pruning
-      // BEATS the heap on large groups (measured: TimeTopK, SURVEY
-      // §8.24) because this operator would ship the full input.
+      // BEATS the heap on large groups (measured in SURVEY §8.24)
+      // because this operator would ship the full input.
       TopKPerKeyExec(k, keys, order,
         TopKPerKeyPartialExec(k, keys, order, planLater(child), maxKeys),
         maxKeys, rankAttr) :: Nil

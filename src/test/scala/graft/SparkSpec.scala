@@ -10,16 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new graft.plans.GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session("graft-test", localCpus = Some(4))
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM (Test / fork := true gives

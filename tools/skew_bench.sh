@@ -5,7 +5,9 @@
 # one language), then emits target/skew_bench.json with per-query
 # wall ratios — skew immunity as recorded telemetry instead of prose.
 # Ratio ~1 = the caps/salting bound the mega-key; a quadratic or
-# single-reducer path shows up as a blowup.
+# single-reducer path shows up as a blowup. Each twin's timings are
+# graft.Bench's on the query subset: one warmup pass, then one timed
+# pass with the cache cleared before every query.
 #
 # Usage: skew_bench.sh [outJson]
 set -euo pipefail
@@ -28,30 +30,28 @@ q_lang_id"
 [ -f "$K/documents.parquet" ] || \
   python3 "$REPO/tools/make_skew.py" "$U" "$K"
 
-run() { # $1 = dir, $2 = log — COLD first runs, fresh JVM per twin
-  SPARK_GRAFT_CPUS=16 SPARK_GRAFT_REPO=$REPO \
+run() { # $1 = dir, $2 = log, $3 = result json — fresh JVM per twin
+  SPARK_GRAFT_CPUS=16 SPARK_GRAFT_REPO=$REPO SPARK_GRAFT_SF_DIR=$1 \
+  SPARK_GRAFT_BENCH_ONLY=${QUERIES// /,} SPARK_GRAFT_BENCH_RUNS=1 \
+  SPARK_GRAFT_BENCH_OUT=$3 \
   /opt/spark/bin/spark-submit --master 'local[16]' --driver-memory 16g \
-    --class graft.Time "$JAR" "$1" $QUERIES > "$2" 2>&1
-  grep "^TIMED" "$2"
+    --class graft.Bench "$JAR" > "$2" 2>&1
 }
 
 echo "== uniform twin"
-run "$U" "$REPO/target/skew_u.log" | tee /tmp/skew_u.txt
+run "$U" "$REPO/target/skew_u.log" "$REPO/target/skew_u.json"
 echo "== mega-key twin"
-run "$K" "$REPO/target/skew_k.log" | tee /tmp/skew_k.txt
+run "$K" "$REPO/target/skew_k.log" "$REPO/target/skew_k.json"
 
-python3 - "$OUT" <<'EOF'
-import json, re, sys
-def parse(p):
-    d = {}
-    for l in open(p):
-        m = re.match(r"TIMED (\S+) rows=(\d+) sec=([\d.]+)", l)
-        if m: d[m.group(1)] = (int(m.group(2)), float(m.group(3)))
-    return d
-u, k = parse("/tmp/skew_u.txt"), parse("/tmp/skew_k.txt")
-rows = {q: {"uniform_sec": u[q][1], "skew_sec": k[q][1],
-            "ratio": round(k[q][1] / u[q][1], 3),
-            "rows_uniform": u[q][0], "rows_skew": k[q][0]}
+python3 - "$OUT" "$REPO/target/skew_u.json" "$REPO/target/skew_k.json" <<'EOF'
+import json, sys
+u, k = (json.load(open(p)) for p in sys.argv[2:4])
+errors = {**u["errors"], **k["errors"]}
+if errors:
+    sys.exit(f"failed queries: {errors}")
+u, k = u["queries"], k["queries"]
+rows = {q: {"uniform_sec": u[q], "skew_sec": k[q],
+            "ratio": round(k[q] / u[q], 3)}
         for q in sorted(u) if q in k}
 worst = max(rows.values(), key=lambda r: r["ratio"])["ratio"] if rows else None
 out = {"queries": rows, "n": len(rows), "worst_ratio": worst}
