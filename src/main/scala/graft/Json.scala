@@ -1,7 +1,7 @@
 package graft
 
-/** JSON text for the records the mains write: Bench's result line and
-  * Verify's `oracle_sql.json`.
+/** JSON text for the records the mains write: Bench's result line,
+  * Verify's `oracle_sql.json` and the chain manifests.
   */
 object Json {
 

@@ -1,10 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.io.File
+import java.nio.file.Files
+import java.time.LocalDate
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.ext.{DedupOps, TextOps, VectorOps}
-import graft.pipelines.{CustomerSalesReport, Ingestion, ProductPerformance,
-  SupplierPerformance}
+import graft.io.{Jdbc, PgFixture, Sinks}
+import graft.pipelines.{CustomerSalesReport, Ingestion, MicroQueries,
+  ProductPerformance, SupplierPerformance}
+import graft.retail.Retail.asOf
 
 /** Daily pipeline runner (reference §2.12: the Airflow DAG chain
   * `[suppliers >> products >> customers >> sales] >> supplier_performance
@@ -13,8 +19,11 @@ import graft.pipelines.{CustomerSalesReport, Ingestion, ProductPerformance,
   * (including the dup-gate's DuplicateKeyException) aborts the run with a
   * nonzero exit, the scheduler's retry signal.
   *
-  * `runMain graft.Runner [sfDir] [daily|corpus]`. The `corpus` chain is
-  * the training-data counterpart over the extension suite: scrub →
+  * `runMain graft.Runner [sfDir] [chain] [dates|now]`; `chain` is a key
+  * of `chains` in [[main]] (default `daily`): daily, corpus, incremental,
+  * publish, backfill, scheduler, maintenance, serve or mapped. The retail
+  * chains pick their tasks from one [[RetailTable]]. The `corpus` chain
+  * is the training-data counterpart over the extension suite: scrub →
   * curation funnel → near-dup clusters → ANN index refresh — the DAG a
   * corpus ingest would schedule.
   *
@@ -76,29 +85,70 @@ object Runner {
         (() => streaming.EventStream.ingestFunnelStats(spark, sfDir).count()))
   }
 
+  /** What a retail task's frame is: a feed's read-back (the task lands
+    * the feed through the double-write itself), a mart (carries its own
+    * pinned DAY_DT) or a report (stamped with the run's day). */
+  object Role extends Enumeration { val Feed, Mart, Report = Value }
+
+  /** A retail task: `frame(day)` builds its frame for a logical day. */
+  final case class RetailTask(name: String, role: Role.Value,
+                              frame: String => DataFrame)
+
+  /** The retail task table: the reference DAG's daily tasks
+    * (ingestion_dag.py:13–30) plus a pre-flight report and the anomaly
+    * flags, each declared once; the `daily`, `backfill`, `scheduler`,
+    * `mapped` and `serve` chains pick theirs here. Reports and marts land
+    * as DAY_DT partitions of `<task>/legacy` beside ingestion's legacy
+    * tables (the reference appends each mart to `legacy.<mart>`), so a
+    * re-run of a day replaces what it landed. */
+  private[graft] final class RetailTable(spark: SparkSession,
+                                         sfDir: String) {
+    import Role._
+    val tasks: Seq[RetailTask] = Seq(
+      // feed pre-flight: the contract report on the orders feed, landed
+      // with the day. It never throws: its rule set fails an FK rule on
+      // purpose, to exercise that branch.
+      RetailTask("expectations", Report,
+        _ => MicroQueries.expectations(spark, sfDir)),
+      RetailTask("ingest_suppliers", Feed, Ingestion.suppliers(spark, sfDir, _)),
+      RetailTask("ingest_products", Feed, Ingestion.products(spark, sfDir, _)),
+      RetailTask("ingest_customers", Feed, Ingestion.customers(spark, sfDir, _)),
+      RetailTask("ingest_sales", Feed, Ingestion.sales(spark, sfDir, _)),
+      RetailTask("supplier_performance", Mart,
+        _ => SupplierPerformance(spark, sfDir)),
+      RetailTask("product_performance", Mart,
+        _ => ProductPerformance(spark, sfDir)),
+      RetailTask("customer_sales_report", Mart,
+        _ => CustomerSalesReport(spark, sfDir)),
+      // ops telemetry: robust daily-volume anomaly flags close the day
+      RetailTask("daily_anomalies", Report,
+        _ => ext.EventOps.dailyAnomalies(spark, sfDir)))
+
+    def of(role: Role.Value): Seq[RetailTask] = tasks.filter(_.role == role)
+
+    /** `ts` as chain steps for `day`, each logging its rows: a feed's
+      * read-back count, else what [[Sinks.dayPartition]] wrote. */
+    def steps(ts: Seq[RetailTask],
+              day: String = asOf): Seq[(String, () => Long)] =
+      ts.map(t => t.name -> (() =>
+        if (t.role == Feed) t.frame(day).count()
+        else Sinks.dayPartition(Sinks.withDay(t.frame(day), day),
+          Ingestion.legacyDir(sfDir, t.name))))
+
+    def marts: Seq[(String, () => Long)] = steps(of(Mart))
+
+    /** The per-day ingestion unit (`<task>@<day>`), one DAY_DT partition
+      * overwrite per feed that never touches neighboring days: the
+      * backfill chain's repeat unit and the catchup's per-tick work. */
+    def ingestUnit(day: String): Seq[(String, () => Long)] =
+      steps(of(Feed), day).map { case (n, run) => s"$n@$day" -> run }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val chain = args.drop(1).headOption.getOrElse("daily")
     val spark = Session("graft-runner")
-
-    val daily: Seq[(String, () => Long)] = Seq(
-      // feed pre-flight: the declarative contract check runs FIRST —
-      // a failing feed should stop the chain before any mart rebuilds
-      "expectations" ->
-        (() => pipelines.MicroQueries.expectations(spark, sfDir).count()),
-      "ingest_suppliers" -> (() => Ingestion.suppliers(spark, sfDir).count()),
-      "ingest_products" -> (() => Ingestion.products(spark, sfDir).count()),
-      "ingest_customers" -> (() => Ingestion.customers(spark, sfDir).count()),
-      "ingest_sales" -> (() => Ingestion.sales(spark, sfDir).count()),
-      "supplier_performance" ->
-        (() => SupplierPerformance(spark, sfDir).count()),
-      "product_performance" ->
-        (() => ProductPerformance(spark, sfDir).count()),
-      "customer_sales_report" ->
-        (() => CustomerSalesReport(spark, sfDir).count()),
-      // ops telemetry: robust daily-volume anomaly flags close the day
-      "daily_anomalies" ->
-        (() => ext.EventOps.dailyAnomalies(spark, sfDir).count()))
+    val retail = new RetailTable(spark, sfDir)
 
     val corpus: Seq[(String, () => Long)] = Seq(
       "pii_scrub" -> (() => TextOps.piiScrub(spark, sfDir).count()),
@@ -183,8 +233,6 @@ object Runner {
       }),
       "ann_index_refresh" -> (() => VectorOps.annIvfSq8(spark, sfDir).count()))
 
-    val incremental = incrementalChain(spark, sfDir)
-
     // the PUBLISHING chain: persists the training-consumable artifacts
     // under a fresh version dir and commits them with ONE chain-level
     // manifest written last (Manifest.publish) — a crash mid-run leaves
@@ -199,31 +247,26 @@ object Runner {
       }))
 
     // the BACKFILL chain (scheduler semantics the reference delegates
-    // to Airflow): replay the ingestion layer for a RANGE of logical
-    // dates — one DAY_DT dynamic-partition overwrite per (entity, day),
-    // so a re-run of any day is idempotent by the Sinks.doubleWrite
-    // contract and never touches neighboring days' partitions. Dates
-    // come from argv[2] as a comma list; marts rebuild once at the end
-    // off the current raw snapshot (the last day's overwrite), matching
-    // the reference DAG's ingest-then-transform shape per run.
+    // to Airflow): the per-day ingestion unit for each logical date in
+    // argv[2] (a comma list), then the marts once, in their own pinned
+    // DAY_DT partition — the reference DAG's ingest-then-transform shape.
     val backfillDates = args.drop(2).headOption
-      .map(_.split(",").toSeq).getOrElse(Seq(Ingestion.asOf))
+      .map(_.split(",").toSeq).getOrElse(Seq(asOf))
     val backfill: Seq[(String, () => Long)] =
-      backfillDates.flatMap(ingestDay(spark, sfDir, _)) ++
-        martTasks(spark, sfDir)
+      backfillDates.flatMap(retail.ingestUnit) ++ retail.marts
 
     // the SCHEDULER chain (Airflow's `@daily` + catchup=True,
     // ingestion_dag.py:15, dag.py:27): compute the logical dates
     // strictly after the persisted watermark up to `now` (argv[2],
     // else the wall clock), replay the per-day ingestion unit once per
     // missed tick oldest-first, commit the watermark after EACH day,
-    // rebuild marts once at the end. See [[runCatchup]].
+    // land the marts once at the end. See [[runCatchup]].
     val scheduler: Seq[(String, () => Long)] = Seq(
       "daily_catchup" -> (() => {
-        val now = args.drop(2).headOption.map(java.time.LocalDate.parse)
-          .getOrElse(java.time.LocalDate.now())
+        val now = args.drop(2).headOption.map(LocalDate.parse)
+          .getOrElse(LocalDate.now())
         val ran = runCatchup(now, schedulerWatermark(sfDir),
-          ingestDay(spark, sfDir, _), martTasks(spark, sfDir))
+          retail.ingestUnit, retail.marts)
         println(s"[runner] catchup ran ${ran.size} tick(s): " +
           ran.mkString(","))
         ran.size.toLong
@@ -257,32 +300,30 @@ object Runner {
       gcFeeds("ivf", ext.VectorOps.ivfFoldBaseDir(sfDir),
         ext.VectorOps.ivfFoldParts))
 
-    val tasks = chain match {
-      case "daily" => daily
-      case "corpus" => corpus
-      case "incremental" => incremental
-      case "publish" => publish
-      case "backfill" => backfill
-      case "scheduler" => scheduler
-      case "maintenance" => maintenance
-      case "serve" => serveTasks(spark, sfDir)
-      case "mapped" => Seq.empty // runs through runMapped below
-      case other =>
-        System.err.println(s"[runner] unknown chain '$other' " +
-          "(expected daily|corpus|incremental|publish|backfill|" +
-          "scheduler|maintenance|serve|mapped)")
-        spark.stop(); sys.exit(2); Seq.empty
-    }
-
     val retries = sys.env.getOrElse("SPARK_GRAFT_TASK_RETRIES", "0").toInt
     val backoff = sys.env.getOrElse("SPARK_GRAFT_RETRY_BACKOFF_MS", "0")
       .toLong
-    try {
-      if (chain == "mapped")
-        runMapped(mappedSteps(spark, sfDir),
-          maxRetries = retries, backoffMs = backoff)
-      else runChain(tasks, maxRetries = retries, backoffMs = backoff)
-    } catch {
+    def linear(tasks: Seq[(String, () => Long)]): () => Unit =
+      () => runChain(tasks, maxRetries = retries, backoffMs = backoff)
+    val chains = scala.collection.immutable.ListMap[String, () => Unit](
+      "daily" -> linear(retail.steps(retail.tasks)),
+      "corpus" -> linear(corpus),
+      "incremental" -> linear(incrementalChain(spark, sfDir)),
+      "publish" -> linear(publish),
+      "backfill" -> linear(backfill),
+      "scheduler" -> linear(scheduler),
+      "maintenance" -> linear(maintenance),
+      "serve" -> linear(serveTasks(spark, sfDir)),
+      "mapped" -> (() => runMapped(mappedSteps(spark, sfDir),
+        maxRetries = retries, backoffMs = backoff)))
+
+    val run = chains.getOrElse(chain, {
+      System.err.println(s"[runner] unknown chain '$chain' " +
+        s"(expected ${chains.keys.mkString("|")})")
+      spark.stop(); sys.exit(2)
+    })
+    try run()
+    catch {
       case e: Throwable =>
         System.err.println(s"[runner] FAILED: $e")
         spark.stop()
@@ -291,45 +332,19 @@ object Runner {
     spark.stop()
   }
 
-  /** The per-day ingestion unit (one DAY_DT dynamic-partition
-    * overwrite per entity — idempotent by the Sinks.doubleWrite
-    * contract, never touching neighboring days): the backfill chain's
-    * repeat unit, and the catchup scheduler's per-tick work. */
-  private[graft] def ingestDay(spark: SparkSession, sfDir: String,
-                               d: String): Seq[(String, () => Long)] = Seq(
-    s"ingest_suppliers@$d" ->
-      (() => Ingestion.suppliers(spark, sfDir, d).count()),
-    s"ingest_products@$d" ->
-      (() => Ingestion.products(spark, sfDir, d).count()),
-    s"ingest_customers@$d" ->
-      (() => Ingestion.customers(spark, sfDir, d).count()),
-    s"ingest_sales@$d" ->
-      (() => Ingestion.sales(spark, sfDir, d).count()))
-
-  private def martTasks(spark: SparkSession,
-                        sfDir: String): Seq[(String, () => Long)] = Seq(
-    "supplier_performance" ->
-      (() => SupplierPerformance(spark, sfDir).count()),
-    "product_performance" ->
-      (() => ProductPerformance(spark, sfDir).count()),
-    "customer_sales_report" ->
-      (() => CustomerSalesReport(spark, sfDir).count()))
-
   /** Where the daily-cadence watermark lives for a dataset (under
     * target/, keyed by fixture name — never inside the read-only
     * data dir). */
-  private[graft] def schedulerWatermark(sfDir: String): java.io.File =
-    new java.io.File(
-      s"target/scheduler/daily_${new java.io.File(sfDir).getName}.tick")
+  private[graft] def schedulerWatermark(sfDir: String): File =
+    new File(s"target/scheduler/daily_${new File(sfDir).getName}.tick")
 
   /** The `@daily` tick arithmetic (Airflow cadence + catchup=True):
     * every logical date STRICTLY AFTER the watermark, up to and
     * including `now`, oldest first — Airflow's catchup execution
     * order. First activation (no watermark) runs only `now`'s tick:
     * there is no start_date older than the deployment. */
-  private[graft] def dueTicks(lastTick: Option[java.time.LocalDate],
-                              now: java.time.LocalDate)
-      : Seq[java.time.LocalDate] = lastTick match {
+  private[graft] def dueTicks(lastTick: Option[LocalDate], now: LocalDate)
+      : Seq[LocalDate] = lastTick match {
     case None => Seq(now)
     case Some(t) =>
       Iterator.iterate(t.plusDays(1))(_.plusDays(1))
@@ -342,20 +357,16 @@ object Runner {
     * already-run tick can never re-fire (re-running a day would be
     * harmless anyway: the per-day unit is an idempotent partition
     * overwrite, drilled in RunnerSchedulingSpec). `tail` runs once
-    * after all ticks (the marts rebuild off the final snapshot,
-    * matching the backfill shape). Returns the dates run.
+    * after all ticks (the marts land once, matching the backfill
+    * shape). Returns the dates run.
     */
-  private[graft] def runCatchup(now: java.time.LocalDate,
-                                wmFile: java.io.File,
+  private[graft] def runCatchup(now: LocalDate, wmFile: File,
                                 dayChain: String => Seq[(String, () => Long)],
                                 tail: Seq[(String, () => Long)] = Seq.empty,
                                 log: String => Unit = println)
       : Seq[String] = {
-    val last =
-      if (wmFile.exists())
-        Some(java.time.LocalDate.parse(
-          java.nio.file.Files.readString(wmFile.toPath).trim))
-      else None
+    val last = Option.when(wmFile.exists())(
+      LocalDate.parse(Files.readString(wmFile.toPath).trim))
     val ticks = dueTicks(last, now)
     if (ticks.isEmpty) log(s"[runner] catchup: watermark $last current, " +
       s"nothing due at $now")
@@ -363,7 +374,7 @@ object Runner {
       log(s"[runner] tick $d firing (watermark was $last)")
       runChain(dayChain(d.toString), log = log)
       wmFile.getParentFile.mkdirs()
-      java.nio.file.Files.writeString(wmFile.toPath, d.toString)
+      Files.writeString(wmFile.toPath, d.toString)
     }
     if (ticks.nonEmpty) runChain(tail, log = log)
     ticks.map(_.toString)
@@ -390,7 +401,6 @@ object Runner {
         s"xcom: no value pushed for key '$key' " +
           s"(pushed: ${store.keys.toSeq.sorted.mkString(",")})")
     }
-    def keys: Set[String] = store.keySet.toSet
   }
 
   /** One step of a dynamically-mapped chain. */
@@ -444,40 +454,38 @@ object Runner {
     * event newer than what the consumer last consumed — Airflow's
     * all-of dataset trigger. Consuming records the current sequence per
     * inlet in the consumer's watermark file (`name=seq` lines). */
-  private[graft] def datasetEvent(base: java.io.File, name: String): Long = {
+  private[graft] def datasetEvent(base: File, name: String): Long = {
     base.mkdirs()
-    val f = new java.io.File(base, s"$name.seq")
+    val f = new File(base, s"$name.seq")
     val next = datasetSeq(base, name) + 1
-    java.nio.file.Files.writeString(f.toPath, next.toString)
+    Files.writeString(f.toPath, next.toString)
     next
   }
 
-  private[graft] def datasetSeq(base: java.io.File, name: String): Long = {
-    val f = new java.io.File(base, s"$name.seq")
-    if (f.exists())
-      java.nio.file.Files.readString(f.toPath).trim.toLong
-    else 0L
+  private[graft] def datasetSeq(base: File, name: String): Long = {
+    val f = new File(base, s"$name.seq")
+    if (f.exists()) Files.readString(f.toPath).trim.toLong else 0L
   }
 
-  private[graft] def consumedSeqs(wm: java.io.File): Map[String, Long] =
+  private[graft] def consumedSeqs(wm: File): Map[String, Long] =
     if (!wm.exists()) Map.empty
-    else java.nio.file.Files.readString(wm.toPath).linesIterator
+    else Files.readString(wm.toPath).linesIterator
       .filter(_.contains('='))
       .map { l =>
         val Array(n, s) = l.split("=", 2); n -> s.trim.toLong
       }.toMap
 
-  private[graft] def datasetsDue(base: java.io.File, inlets: Seq[String],
-                                 wm: java.io.File): Boolean = {
+  private[graft] def datasetsDue(base: File, inlets: Seq[String],
+                                 wm: File): Boolean = {
     val seen = consumedSeqs(wm)
     inlets.nonEmpty &&
       inlets.forall(n => datasetSeq(base, n) > seen.getOrElse(n, 0L))
   }
 
-  private[graft] def consumeDatasets(base: java.io.File, inlets: Seq[String],
-                                     wm: java.io.File): Unit = {
+  private[graft] def consumeDatasets(base: File, inlets: Seq[String],
+                                     wm: File): Unit = {
     wm.getParentFile.mkdirs()
-    java.nio.file.Files.writeString(wm.toPath,
+    Files.writeString(wm.toPath,
       inlets.map(n => s"$n=${datasetSeq(base, n)}").mkString("\n"))
   }
 
@@ -495,18 +503,15 @@ object Runner {
     */
   private[graft] def serveTasks(spark: SparkSession,
                                 sfDir: String): Seq[(String, () => Long)] = {
-    import org.apache.spark.sql.{DataFrame, SaveMode}
     val opts = Map("driver" -> "org.postgresql.Driver")
-    val tag = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    def one(name: String,
-            mart: => DataFrame): (String, () => Long) =
-      s"serve_$name" -> (() => {
-        val url = graft.io.PgFixture.ensure()
-        val table = s"mart_${name}_$tag"
-        val frame = mart
-        graft.io.Jdbc.write(frame, url, table, SaveMode.Overwrite,
-          options = opts)
-        val back = graft.io.Jdbc.read(spark, url, table, options = opts)
+    val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9]", "_")
+    new RetailTable(spark, sfDir).of(Role.Mart).map { t =>
+      s"serve_${t.name}" -> (() => {
+        val url = PgFixture.ensure()
+        val table = s"mart_${t.name}_$tag"
+        val frame = t.frame(asOf)
+        Jdbc.write(frame, url, table, SaveMode.Overwrite, options = opts)
+        val back = Jdbc.read(spark, url, table, options = opts)
         val missing = frame.exceptAll(back).count()
         val phantom = back.exceptAll(frame).count()
         if (missing + phantom != 0) throw new IllegalStateException(
@@ -514,10 +519,7 @@ object Runner {
             s"($missing mart rows missing, $phantom phantom rows)")
         back.count()
       })
-    Seq(
-      one("supplier_performance", SupplierPerformance(spark, sfDir)),
-      one("product_performance", ProductPerformance(spark, sfDir)),
-      one("customer_sales_report", CustomerSalesReport(spark, sfDir)))
+    }
   }
 
   /** Which feed entities are present in this fixture dir — the runtime
@@ -525,17 +527,13 @@ object Runner {
     * exampledag.py:43–77: the upstream task returns a list whose length
     * the DAG author cannot know). Probes each feed's source fixture;
     * DAG order (ingestion_dag.py:28) is preserved among those found. */
-  private[graft] def discoverFeeds(sfDir: String): Seq[String] = {
-    val probe = Map(
-      "suppliers" -> "supplier.parquet", "products" -> "part.parquet",
+  private[graft] def discoverFeeds(sfDir: String): Seq[String] =
+    Seq("suppliers" -> "supplier.parquet", "products" -> "part.parquet",
       "customers" -> "customer.parquet", "sales" -> "lineitem.parquet")
-    Seq("suppliers", "products", "customers", "sales")
-      .filter(e => new java.io.File(sfDir, probe(e)).exists())
-  }
+      .collect { case (e, f) if new File(sfDir, f).exists() => e }
 
-  private[graft] def datasetBase(sfDir: String): java.io.File =
-    new java.io.File(
-      s"target/scheduler/datasets_${new java.io.File(sfDir).getName}")
+  private[graft] def datasetBase(sfDir: String): File =
+    new File(s"target/scheduler/datasets_${new File(sfDir).getName}")
 
   /** The DYNAMIC-MAPPING chain (reference exampledag.py end-to-end):
     * discover the feeds present at runtime → one mapped ingestion
@@ -546,12 +544,9 @@ object Runner {
   private[graft] def mappedSteps(spark: SparkSession,
                                  sfDir: String): Seq[Step] = {
     val base = datasetBase(sfDir)
-    val martsWm = new java.io.File(base, "consumer_marts.wm")
-    val ingest: Map[String, () => Long] = Map(
-      "suppliers" -> (() => Ingestion.suppliers(spark, sfDir).count()),
-      "products" -> (() => Ingestion.products(spark, sfDir).count()),
-      "customers" -> (() => Ingestion.customers(spark, sfDir).count()),
-      "sales" -> (() => Ingestion.sales(spark, sfDir).count()))
+    val martsWm = new File(base, "consumer_marts.wm")
+    val retail = new RetailTable(spark, sfDir)
+    val ingest = retail.steps(retail.of(Role.Feed)).toMap
     Seq(
       Task("discover_feeds", x => {
         val feeds = discoverFeeds(sfDir)
@@ -560,14 +555,14 @@ object Runner {
         feeds.size.toLong
       }),
       Expand("ingest_feed", "feeds", (_, feed, _) => {
-        val n = ingest(feed.asInstanceOf[String])()
+        val n = ingest(s"ingest_$feed")()
         datasetEvent(base, s"raw_$feed")
         n
       }),
       Task("marts_if_fresh", x => {
         val inlets = x.pull[Seq[String]]("feeds").map("raw_" + _)
         if (datasetsDue(base, inlets, martsWm)) {
-          runChain(martTasks(spark, sfDir))
+          runChain(retail.marts)
           consumeDatasets(base, inlets, martsWm)
           x.pull[Int]("n_feeds").toLong
         } else {
@@ -583,11 +578,10 @@ object Runner {
     * ingestion_dag.py — here in-engine): a task gets 1 + `maxRetries`
     * attempts with linear backoff; exhausting them lets the LAST
     * attempt's exception propagate, which aborts the chain fail-fast
-    * exactly as before (retries default to 0, so existing behavior is
-    * byte-identical unless opted in). Safe to retry by construction:
-    * every task in every chain is either a read-only aggregation or an
-    * idempotent overwrite (the doubleWrite/artifact-dir contracts), so
-    * a failed attempt leaves nothing a second attempt can double-apply.
+    * (retries default to 0). Safe to retry by construction: every task
+    * in every chain is either a read-only aggregation or an idempotent
+    * overwrite (the DAY_DT-partition and artifact-dir contracts), so a
+    * failed attempt leaves nothing a second attempt can double-apply.
     */
   private[graft] def runChain(tasks: Seq[(String, () => Long)],
                               maxRetries: Int = 0,

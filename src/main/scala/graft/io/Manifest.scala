@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import graft.Json.str
+
 /** Chain-level versioned manifest: ONE JSON document, written LAST,
   * naming every input and output of a multi-artifact pipeline run by
   * content fingerprint — the atomic-commit point for a chain whose
@@ -30,8 +32,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *     artifacts it did not publish (tampered, partially rewritten, or
   *     cross-version mixes fail loudly).
   *
-  * JSON writing is hand-rolled (flat, all-string schema); parsing uses
-  * the Jackson databind already on Spark's classpath.
+  * JSON writing is hand-rolled (flat, all-string schema, [[graft.Json.str]]
+  * escapes); parsing uses the Jackson databind on Spark's classpath.
   */
 object Manifest {
 
@@ -48,18 +50,15 @@ object Manifest {
             s"(has: ${artifacts.map(_.name).mkString(", ")})"))
   }
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   private def render(m: ChainManifest): String = {
     val ins = m.inputs.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
+      .map { case (k, v) => s"${str(k)}: ${str(v)}" }
       .mkString("{", ", ", "}")
     val arts = m.artifacts.map(a =>
-      s"""{"name": ${jstr(a.name)}, "path": ${jstr(a.path)}, """ +
-        s""""fingerprint": ${jstr(a.fingerprint)}}""")
+      s"""{"name": ${str(a.name)}, "path": ${str(a.path)}, """ +
+        s""""fingerprint": ${str(a.fingerprint)}}""")
       .mkString("[", ", ", "]")
-    s"""{"version": ${jstr(m.version)}, "sf_dir": ${jstr(m.sfDir)}, """ +
+    s"""{"version": ${str(m.version)}, "sf_dir": ${str(m.sfDir)}, """ +
       s""""inputs": $ins, "artifacts": $arts}"""
   }
 

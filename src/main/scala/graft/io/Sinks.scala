@@ -1,7 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, to_date}
 import org.apache.spark.storage.StorageLevel
 
 /** Double-write sink (reference S7, ingestion_task.py:63–66 et al.): every
@@ -33,12 +33,25 @@ object Sinks {
     try {
       val raw = if (rawIncludesDayDt) df else df.drop("DAY_DT")
       raw.write.mode("overwrite").parquet(rawPath)
-      df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("DAY_DT")
-        .parquet(legacyPath)
+      dayPartition(df, legacyPath)
     } finally df.unpersist()
   }
+
+  /** DAY_DT dynamic-partition overwrite: replaces only the days `df`
+    * holds. Returns the rows written, counted by an [[Observation]] on
+    * the write itself — no second job. */
+  def dayPartition(df: DataFrame, path: String): Long = {
+    val written = new Observation()
+    df.observe(written, count(lit(1)).as("rows")).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").partitionBy("DAY_DT")
+      .parquet(path)
+    written.get("rows").asInstanceOf[Long]
+  }
+
+  /** `df` stamped with `day` as DAY_DT unless it carries one already. */
+  def withDay(df: DataFrame, day: String): DataFrame =
+    if (df.columns.contains("DAY_DT")) df
+    else df.withColumn("DAY_DT", to_date(lit(day)))
 
   /** One snapshot day out of the legacy history — partition-pruned scan. */
   def readLegacyDay(spark: SparkSession, legacyPath: String,

@@ -33,8 +33,6 @@ import graft.retail.Retail
   */
 object CustomerSalesReport {
 
-  val asOf = "2024-06-01"
-
   def apply(spark: SparkSession, sfDir: String): DataFrame = {
     val sales = Retail.sales(spark, sfDir)
       .filter(col("ORDER_STATUS").isin("Delivered", "Shipped")) // F1
@@ -49,7 +47,7 @@ object CustomerSalesReport {
     // digits, so (1 - DISCOUNT*0.01) is exact at scale 4 and the product is
     // exact at scale 6 — multiplication only, no decimal division/rounding.
     val derived = joined
-      .withColumn("DAY_DT", to_date(lit(asOf)))
+      .withColumn("DAY_DT", to_date(lit(Retail.asOf)))
       .withColumn("SALE_MONTH", month(col("SALE_DATE")))
       .withColumn("SALE_YEAR", year(col("SALE_DATE")))
       .withColumn("PRICE", col("SELLING_PRICE")) // already scale-2 decimal
@@ -57,7 +55,7 @@ object CustomerSalesReport {
         (col("QUANTITY") * col("SELLING_PRICE") *
           (lit(1) - col("DISCOUNT") * lit(0.01).cast(DecimalType(3, 2))))
           .cast(DecimalType(25, 6)))
-      .withColumn("LOAD_TSTMP", to_timestamp(lit(s"$asOf 00:00:00")))
+      .withColumn("LOAD_TSTMP", to_timestamp(lit(s"${Retail.asOf} 00:00:00")))
 
     // W1 (exact rewrite): global percent_rank tier without the global sort.
     // The histogram pass reads a PRUNED twin of the amount derivation —
@@ -103,14 +101,14 @@ object CustomerSalesReport {
        |  LEFT JOIN products p USING (PRODUCT_ID)
        |  LEFT JOIN customers c USING (CUSTOMER_ID)),
        |derived AS (
-       |  SELECT *, DATE '$asOf' AS DAY_DT,
+       |  SELECT *, DATE '${Retail.asOf}' AS DAY_DT,
        |         month(SALE_DATE) AS SALE_MONTH,
        |         year(SALE_DATE) AS SALE_YEAR,
        |         SELLING_PRICE AS PRICE,
        |         CAST(QUANTITY * SELLING_PRICE *
        |              (1 - DISCOUNT * CAST(0.01 AS DECIMAL(3,2)))
        |              AS DECIMAL(25,6)) AS SALE_AMOUNT,
-       |         TIMESTAMP '$asOf 00:00:00' AS LOAD_TSTMP
+       |         TIMESTAMP '${Retail.asOf} 00:00:00' AS LOAD_TSTMP
        |  FROM joined),
        |tiered AS (
        |  SELECT *, percent_rank() OVER (ORDER BY SALE_AMOUNT DESC) AS pr,

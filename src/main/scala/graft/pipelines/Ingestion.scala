@@ -33,10 +33,13 @@ import graft.retail.Retail
   */
 object Ingestion {
 
-  val asOf = "2024-06-01"
-
   private def workDir(sfDir: String, entity: String): String =
     s"target/ingest/${new File(sfDir).getName}/$entity"
+
+  /** `entity`'s DAY_DT-partitioned history: a feed's, or a report's or
+    * mart's that the Runner lands beside them. */
+  def legacyDir(sfDir: String, entity: String): String =
+    workDir(sfDir, s"$entity/legacy")
 
   /** REST dimension feeds are DRIVER-SIDE by architecture (the reference's
     * extracts are too): one HTTP body per entity. That is only safe for
@@ -58,9 +61,10 @@ object Ingestion {
     * one-body extract. (The fixture SERVER still holds the docs — that is
     * the stand-in for the external API, not the pipeline under test.)
     */
-  private def viaRest(spark: SparkSession, df: DataFrame, entity: String,
-                      rawNames: Map[String, String], secured: Boolean,
-                      schema: StructType, stagingDir: String): DataFrame = {
+  private def viaRest(spark: SparkSession, sfDir: String, df: DataFrame,
+                      entity: String, rawNames: Map[String, String],
+                      secured: Boolean, schema: StructType): DataFrame = {
+    val stagingDir = workDir(sfDir, s"$entity/feed_staging")
     val rawDf = df.select(df.columns.toIndexedSeq.map(c =>
       col(c).as(rawNames.getOrElse(c, c.toLowerCase))): _*)
     val feedSize = rawDf.count()
@@ -93,18 +97,18 @@ object Ingestion {
 
   private def conform(extracted: DataFrame, renames: Map[String, String],
                       targetCols: Seq[String], pk: String,
-                      rawPath: String, legacyPath: String,
-                      spark: SparkSession,
+                      spark: SparkSession, sfDir: String, entity: String,
                       rawIncludesDayDt: Boolean = false,
-                      day: String = asOf): DataFrame = {
-    val conformed = Normalize.selectCols(
+                      day: String = Retail.asOf): DataFrame = {
+    val conformed = Sinks.withDay(Normalize.selectCols(
       Normalize.normalizeColumnNames( // P1
         Normalize.renameAll(extracted, renames)), // P2
-      targetCols) // P3
-      .withColumn("DAY_DT", to_date(lit(day)))
+      targetCols), day) // P3
     Quality.requireUnique(conformed, Seq(pk)) // A1 fail-fast gate
-    Sinks.doubleWrite(conformed, rawPath, legacyPath, rawIncludesDayDt)
-    Canon.canonicalize(Sinks.readLegacyDay(spark, legacyPath, day))
+    val legacy = legacyDir(sfDir, entity)
+    Sinks.doubleWrite(conformed, workDir(sfDir, s"$entity/raw"), legacy,
+      rawIncludesDayDt)
+    Canon.canonicalize(Sinks.readLegacyDay(spark, legacy, day))
   }
 
   // ---- suppliers (REST, unsecured) — reference ingestion_task.py:15–76
@@ -117,14 +121,12 @@ object Ingestion {
     StructField("contact", StringType), StructField("region", StringType)))
 
   def suppliers(spark: SparkSession, sfDir: String,
-                day: String = asOf): DataFrame = {
-    val extracted = viaRest(spark, Retail.suppliers(spark, sfDir),
-      "suppliers", suppliersRaw, secured = false, suppliersSchema,
-      workDir(sfDir, "suppliers/feed_staging"))
+                day: String = Retail.asOf): DataFrame = {
+    val extracted = viaRest(spark, sfDir, Retail.suppliers(spark, sfDir),
+      "suppliers", suppliersRaw, secured = false, suppliersSchema)
     conform(extracted, Map("contact" -> "contact details"),
       Seq("SUPPLIER_ID", "SUPPLIER_NAME", "CONTACT_DETAILS", "REGION"),
-      "SUPPLIER_ID", workDir(sfDir, "suppliers/raw"),
-      workDir(sfDir, "suppliers/legacy"), spark, day = day)
+      "SUPPLIER_ID", spark, sfDir, "suppliers", day = day)
   }
 
   // ---- products (REST, unsecured) — reference ingestion_task.py:79–151
@@ -143,15 +145,13 @@ object Ingestion {
     StructField("reorder level", IntegerType)))
 
   def products(spark: SparkSession, sfDir: String,
-               day: String = asOf): DataFrame = {
-    val extracted = viaRest(spark, Retail.products(spark, sfDir),
-      "products", productsRaw, secured = false, productsSchema,
-      workDir(sfDir, "products/feed_staging"))
+               day: String = Retail.asOf): DataFrame = {
+    val extracted = viaRest(spark, sfDir, Retail.products(spark, sfDir),
+      "products", productsRaw, secured = false, productsSchema)
     conform(extracted, Map.empty,
       Seq("PRODUCT_ID", "PRODUCT_NAME", "CATEGORY", "SELLING_PRICE",
         "COST_PRICE", "STOCK_QUANTITY", "REORDER_LEVEL"),
-      "PRODUCT_ID", workDir(sfDir, "products/raw"),
-      workDir(sfDir, "products/legacy"), spark, day = day)
+      "PRODUCT_ID", spark, sfDir, "products", day = day)
   }
 
   // ---- customers (REST + OAuth2) — reference ingestion_task.py:154–215
@@ -165,14 +165,12 @@ object Ingestion {
     StructField("phone", StringType)))
 
   def customers(spark: SparkSession, sfDir: String,
-                day: String = asOf): DataFrame = {
-    val extracted = viaRest(spark, Retail.customers(spark, sfDir),
-      "customers", customersRaw, secured = true, customersSchema,
-      workDir(sfDir, "customers/feed_staging"))
+                day: String = Retail.asOf): DataFrame = {
+    val extracted = viaRest(spark, sfDir, Retail.customers(spark, sfDir),
+      "customers", customersRaw, secured = true, customersSchema)
     conform(extracted, Map("phone" -> "phone number"),
       Seq("CUSTOMER_ID", "NAME", "CITY", "EMAIL", "PHONE_NUMBER"),
-      "CUSTOMER_ID", workDir(sfDir, "customers/raw"),
-      workDir(sfDir, "customers/legacy"), spark, day = day)
+      "CUSTOMER_ID", spark, sfDir, "customers", day = day)
   }
 
   // ---- sales (bulk CSV, declared schema) — reference ingestion_task.py:218–295
@@ -188,7 +186,7 @@ object Ingestion {
     StructField("payment mode", StringType)))
 
   def sales(spark: SparkSession, sfDir: String,
-            day: String = asOf): DataFrame = {
+            day: String = Retail.asOf): DataFrame = {
     // Synthesize the daily CSV drop (the reference reads
     // gs://meta-morph-flow/{yyyymmdd}/sales_{yyyymmdd}.csv), then ingest it
     // through the declared-schema CSV source — executors read it directly.
@@ -231,15 +229,14 @@ object Ingestion {
       Seq("SALE_ID", "CUSTOMER_ID", "PRODUCT_ID", "SUPPLIER_ID", "SALE_DATE",
         "QUANTITY", "DISCOUNT", "SHIPPING_COST", "ORDER_STATUS",
         "PAYMENT_MODE"),
-      "SALE_ID", workDir(sfDir, "sales/raw"),
-      workDir(sfDir, "sales/legacy"), spark,
+      "SALE_ID", spark, sfDir, "sales",
       rawIncludesDayDt = true, // reference defect #4 parity, SURVEY §2.13.4
       day = day)
   }
 
   // ---- oracles: read-back of the day's legacy partition == entity + DAY_DT
 
-  private def dayLit = s"strftime(DATE '$asOf', '%Y-%m-%d') AS DAY_DT"
+  private def dayLit = s"strftime(DATE '${Retail.asOf}', '%Y-%m-%d') AS DAY_DT"
 
   val suppliersOracle: String =
     s"""WITH ${Retail.sql.suppliers}

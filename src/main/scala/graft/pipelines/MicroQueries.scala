@@ -339,15 +339,14 @@ object MicroQueries {
       |FROM documents GROUP BY CUBE(lang, source)""".stripMargin
 
   def dateAndRound(spark: SparkSession, sfDir: String): DataFrame = {
-    val asOf = "2024-06-01"
     val s = Retail.sales(spark, sfDir)
     Canon.canonicalize(s.select(
       col("SALE_ID"),
-      to_date(lit(asOf)).as("DAY_DT"),
-      date_sub(to_date(lit(asOf)), 1).as("YESTERDAY"),
+      to_date(lit(Retail.asOf)).as("DAY_DT"),
+      date_sub(to_date(lit(Retail.asOf)), 1).as("YESTERDAY"),
       month(col("SALE_DATE")).as("SALE_MONTH"),
       year(col("SALE_DATE")).as("SALE_YEAR"),
-      datediff(to_date(lit(asOf)), col("SALE_DATE")).as("AGE_DAYS"),
+      datediff(to_date(lit(Retail.asOf)), col("SALE_DATE")).as("AGE_DAYS"),
       round((col("QUANTITY") * lit(7)).cast(DecimalType(12, 3)) / lit(3), 2)
         .as("ROUNDED_AMT")))
   }
@@ -355,11 +354,11 @@ object MicroQueries {
   val dateAndRoundOracle: String =
     s"""WITH ${Retail.sql.sales}
        |SELECT SALE_ID,
-       |       strftime(DATE '2024-06-01', '%Y-%m-%d') AS DAY_DT,
-       |       strftime(DATE '2024-06-01' - INTERVAL 1 DAY, '%Y-%m-%d') AS YESTERDAY,
+       |       strftime(DATE '${Retail.asOf}', '%Y-%m-%d') AS DAY_DT,
+       |       strftime(DATE '${Retail.asOf}' - INTERVAL 1 DAY, '%Y-%m-%d') AS YESTERDAY,
        |       CAST(month(SALE_DATE) AS BIGINT) AS SALE_MONTH,
        |       CAST(year(SALE_DATE) AS BIGINT) AS SALE_YEAR,
-       |       CAST(date_diff('day', SALE_DATE, DATE '2024-06-01') AS BIGINT) AS AGE_DAYS,
+       |       CAST(date_diff('day', SALE_DATE, DATE '${Retail.asOf}') AS BIGINT) AS AGE_DAYS,
        |       CAST(round(CAST(QUANTITY * 7 AS DECIMAL(12,3)) / 3, 2)
        |            AS DOUBLE) AS ROUNDED_AMT
        |FROM sales""".stripMargin

@@ -32,8 +32,6 @@ import graft.retail.Retail
   */
 object ProductPerformance {
 
-  val asOf = "2024-06-01"
-
   def apply(spark: SparkSession, sfDir: String): DataFrame = {
     val products = Retail.products(spark, sfDir)
     val sales = Retail.sales(spark, sfDir)
@@ -62,7 +60,7 @@ object ProductPerformance {
       .withColumn("STOCK_STATUS",
         when(col("STOCK_QUANTITY") <= col("REORDER_LEVEL"),
           lit("Below Reorder Level")).otherwise(lit("Sufficient Stock")))
-      .withColumn("DAY_DT", to_date(lit(asOf)))
+      .withColumn("DAY_DT", to_date(lit(Retail.asOf)))
 
     val repaired = Quality.nullRepair(out, stringFills = Map.empty,
         zeroFills = Seq("TOTAL_QUANTITY_SOLD", "TOTAL_SALES_AMOUNT", "PROFIT"))
@@ -95,6 +93,6 @@ object ProductPerformance {
        |            THEN 'Below Reorder Level'
        |            ELSE 'Sufficient Stock' END AS STOCK_STATUS,
        |       CAST(coalesce(PROFIT, 0) AS DOUBLE) AS PROFIT,
-       |       strftime(DATE '$asOf', '%Y-%m-%d') AS DAY_DT
+       |       strftime(DATE '${Retail.asOf}', '%Y-%m-%d') AS DAY_DT
        |FROM agg""".stripMargin
 }

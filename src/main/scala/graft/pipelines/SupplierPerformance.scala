@@ -33,8 +33,6 @@ import graft.retail.Retail
   */
 object SupplierPerformance {
 
-  val asOf = "2024-06-01"
-
   def apply(spark: SparkSession, sfDir: String): DataFrame = {
     val suppliers = Retail.suppliers(spark, sfDir)
     val products = Retail.products(spark, sfDir)
@@ -77,7 +75,7 @@ object SupplierPerformance {
         stringFills = Map("TOP_SELLING_PRODUCT" -> "No sales"),
         zeroFills = Seq("TOTAL_REVENUE", "TOTAL_QUANTITY_SOLD",
           "UNIQUE_PRODUCTS_SOLD"))
-      .withColumn("DAY_DT", to_date(lit(asOf)))
+      .withColumn("DAY_DT", to_date(lit(Retail.asOf)))
       .select("SUPPLIER_ID", "SUPPLIER_NAME", "TOTAL_REVENUE",
         "TOTAL_QUANTITY_SOLD", "UNIQUE_PRODUCTS_SOLD", "TOP_SELLING_PRODUCT",
         "DAY_DT")
@@ -113,7 +111,7 @@ object SupplierPerformance {
        |       CAST(coalesce(a.TOTAL_QUANTITY_SOLD, 0) AS DOUBLE) AS TOTAL_QUANTITY_SOLD,
        |       coalesce(a.UNIQUE_PRODUCTS_SOLD, 0) AS UNIQUE_PRODUCTS_SOLD,
        |       coalesce(t.TOP_SELLING_PRODUCT, 'No sales') AS TOP_SELLING_PRODUCT,
-       |       strftime(DATE '$asOf', '%Y-%m-%d') AS DAY_DT
+       |       strftime(DATE '${Retail.asOf}', '%Y-%m-%d') AS DAY_DT
        |FROM suppliers s
        |LEFT JOIN agg a USING (SUPPLIER_ID)
        |LEFT JOIN top t USING (SUPPLIER_ID)""".stripMargin

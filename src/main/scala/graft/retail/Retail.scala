@@ -22,6 +22,9 @@ import graft.io.Tables
   */
 object Retail {
 
+  /** The pinned snapshot day (DAY_DT) of every retail query and chain. */
+  val asOf = "2024-06-01"
+
   /** SUPPLIER_ID, SUPPLIER_NAME, CONTACT_DETAILS, REGION
     * (reference ingestion_task.py:29–42). REGION resolves via the
     * nation→region dimension chain; both dims are tiny → broadcast.

@@ -271,7 +271,7 @@ class RunnerSchedulingSpec extends SparkSpec {
     java.nio.file.Files.writeString(wm.toPath, "2024-06-09")
     val legacy = s"target/ingest/${new File(sfDir).getName}/suppliers/legacy"
     val ran = Runner.runCatchup(ld("2024-06-12"), wm,
-      Runner.ingestDay(spark, sfDir, _), log = _ => ())
+      new Runner.RetailTable(spark, sfDir).ingestUnit, log = _ => ())
     assert(ran == Seq("2024-06-10", "2024-06-11", "2024-06-12"))
     val byDay = spark.read.parquet(legacy)
       .filter(col("DAY_DT").isin(ran: _*))

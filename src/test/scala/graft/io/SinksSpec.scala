@@ -35,6 +35,20 @@ class SinksSpec extends SparkSpec {
     assert(Sinks.readLegacyDay(spark, legacy, "2024-06-02").count() == 1)
   }
 
+  test("dayPartition returns the rows written and replaces a same-day " +
+      "partition") {
+    val legacy = tmp() + "/legacy"
+    def day(d: String, n: Int) =
+      (1 to n).map(i => (i.toLong, d)).toDF("ID", "V")
+        .withColumn("DAY_DT", to_date(lit(d)))
+    assert(Sinks.dayPartition(day("2024-06-01", 3), legacy) == 3L)
+    assert(Sinks.dayPartition(day("2024-06-02", 2), legacy) == 2L)
+    assert(Sinks.dayPartition(day("2024-06-01", 1), legacy) == 1L)
+    assert(Sinks.readLegacyDay(spark, legacy, "2024-06-01").count() == 1)
+    assert(Sinks.readLegacyDay(spark, legacy, "2024-06-02").count() == 2)
+    assert(Sinks.dayPartition(day("2024-06-03", 0), legacy) == 0L)
+  }
+
   test("legacy read-back prunes partitions (PartitionFilters on DAY_DT)") {
     val legacy = tmp() + "/legacy"
     val d = Seq((1L, "a")).toDF("ID", "V")
