@@ -48,6 +48,12 @@ object Session {
       // the events fixture is TIMESTAMP(NANOS) parquet; its reader
       // requires this mapping and fails loudly if unset (EventOps.events)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // one chain pass compiles more generated classes than the default
+      // 100-entry cache holds (214 for the daily chain: a class is keyed
+      // by the compiling thread's class loader as well as its source, so
+      // the driver and the task threads each compile it), and the LRU
+      // evicts them all: every later pass recompiled 2.4–3.6 s of classes
+      .config("spark.sql.codegen.cache.maxEntries", 1000)
       // nothing reads the web UI; without it a JVM binds no port and
       // keeps no UI state
       .config("spark.ui.enabled", "false")

@@ -26,6 +26,13 @@ import org.apache.spark.sql.functions.col
   *    files are re-registered metadata-only via CREATE TABLE ... USING
   *    parquet CLUSTERED BY ... LOCATION (schema read from the parquet
   *    footer; no data rewrite).
+  *
+  * Used by [[graft.io.Partitioned.dppBucketedJoin]] (the partitioned
+  * lineitem layout beside the bucketed orders) and BucketingSpec. The
+  * sales entity is not joined from these layouts: at fixture scale the
+  * planner broadcasts orders, so the merge join never runs and every
+  * scan is 32 tasks; `Retail.sales` reads one published artifact of the
+  * joined entity instead.
   */
 object Bucketing {
 

@@ -9,8 +9,9 @@ import org.apache.spark.storage.StorageLevel
   * (overwrite) and a `legacy.*` history (append keyed by DAY_DT).
   *
   * Differences from the reference, both deliberate:
-  *  - the frame is persisted across the two writes — the reference
-  *    recomputes the full extract lineage per write (SURVEY §2.13.6);
+  *  - the frame is persisted across its gate and the two writes — the
+  *    reference recomputes the full extract lineage per write
+  *    (SURVEY §2.13.6);
   *  - the history write is an idempotent DAY_DT dynamic-partition overwrite
   *    rather than a blind append: the reference's append duplicates the day
   *    on any Airflow retry. Cross-day behavior is identical (new days
@@ -26,11 +27,19 @@ object Sinks {
     * suppliers/products/customers but leaves DAY_DT in `raw.sales_pre`
     * (ingestion_task.py:283–286 vs :63/:139/:201 — SURVEY §2.13.4);
     * replicated so downstream readers see the same raw schemas.
+    *
+    * `gate` runs on the persisted frame before either write: a gate that
+    * throws leaves nothing written, and a gate that passes has filled the
+    * cache both writes read, so the frame's source is read once. This is
+    * the one place the frame is persisted and unpersisted, whether the
+    * gate or a write throws.
     */
   def doubleWrite(df: DataFrame, rawPath: String, legacyPath: String,
-                  rawIncludesDayDt: Boolean = false): Unit = {
+                  rawIncludesDayDt: Boolean = false,
+                  gate: DataFrame => Unit = _ => ()): Unit = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      gate(df)
       val raw = if (rawIncludesDayDt) df else df.drop("DAY_DT")
       raw.write.mode("overwrite").parquet(rawPath)
       dayPartition(df, legacyPath)

@@ -20,9 +20,20 @@ import graft.retail.Retail
   *    (only the customers endpoint is secured — server/server.py:89–106)
   *  - sales: CSV bulk file with declared schema (S3) → reference :218–295
   *
-  * Each pipeline: extract → rename raw fields (P2) → normalize names (P1) →
-  * select target columns (P3) → DAY_DT stamp → PK-uniqueness gate (A1) →
-  * double-write (S7) → partition-pruned read-back.
+  * Each pipeline reads its extract ONCE:
+  *
+  *  1. extract: a REST feed is one collect of at most
+  *     `maxRestFeedRows + 1` rows (one row over the cap fails the feed,
+  *     so the driver's copy is bounded by construction), paged through
+  *     the HTTP client into staged JSON lines; the sales feed is a CSV
+  *     drop synthesized from [[Retail.sales]];
+  *  2. conform: rename raw fields (P2) → normalize names (P1) → select
+  *     target columns (P3) → DAY_DT stamp;
+  *  3. [[Sinks.doubleWrite]] (S7) persists the conformed frame, runs the
+  *     PK-uniqueness gate (A1) on it and, only if it passes, writes both
+  *     copies from the cache — the staged JSON or CSV is parsed once,
+  *     and a failing gate throws before any write;
+  *  4. partition-pruned read-back of the day's legacy partition.
   *
   * Scale notes: the REST extracts carry only dimension feeds and run on the
   * driver (as in the reference); the fact table (sales) arrives as bulk
@@ -43,8 +54,8 @@ object Ingestion {
 
   /** REST dimension feeds are DRIVER-SIDE by architecture (the reference's
     * extracts are too): one HTTP body per entity. That is only safe for
-    * dimension-sized data, so the collect is guarded — at this size a feed
-    * must move to a paginated/bulk-file extract instead of silently
+    * dimension-sized data, so the collect is capped — above this size a
+    * feed must move to a paginated/bulk-file extract instead of silently
     * ballooning driver memory at a 100× data scale.
     */
   val maxRestFeedRows = 5000000L
@@ -60,19 +71,25 @@ object Ingestion {
     * paging preserves order, so the landed rows are identical to the
     * one-body extract. (The fixture SERVER still holds the docs — that is
     * the stand-in for the external API, not the pipeline under test.)
+    *
+    * The docs are one collect of at most `cap + 1` rows: a feed over
+    * `cap` fails before anything is staged, and the driver never holds
+    * more than `cap + 1` docs.
     */
-  private def viaRest(spark: SparkSession, sfDir: String, df: DataFrame,
-                      entity: String, rawNames: Map[String, String],
-                      secured: Boolean, schema: StructType): DataFrame = {
+  private[graft] def viaRest(spark: SparkSession, sfDir: String,
+                             df: DataFrame, entity: String,
+                             rawNames: Map[String, String], secured: Boolean,
+                             schema: StructType,
+                             cap: Long = maxRestFeedRows): DataFrame = {
     val stagingDir = workDir(sfDir, s"$entity/feed_staging")
     val rawDf = df.select(df.columns.toIndexedSeq.map(c =>
       col(c).as(rawNames.getOrElse(c, c.toLowerCase))): _*)
-    val feedSize = rawDf.count()
-    require(feedSize <= maxRestFeedRows,
-      s"REST feed '$entity' has $feedSize rows (> $maxRestFeedRows): " +
-        "the in-process fixture server holds the feed in memory; a real " +
-        "upstream has no such cap — the extract loop itself is paged")
-    val docs = rawDf.toJSON.collect().toIndexedSeq
+    val docs = rawDf.limit(Math.toIntExact(cap + 1)).toJSON.collect()
+      .toIndexedSeq
+    require(docs.size <= cap,
+      s"REST feed '$entity' has more than $cap rows: the in-process " +
+        "fixture server holds the feed in memory; a real upstream has no " +
+        "such cap — the extract loop itself is paged")
     val server = new Rest.FixtureServer(Map(entity -> docs),
       if (secured) Set(entity) else Set.empty)
     try {
@@ -104,10 +121,10 @@ object Ingestion {
       Normalize.normalizeColumnNames( // P1
         Normalize.renameAll(extracted, renames)), // P2
       targetCols), day) // P3
-    Quality.requireUnique(conformed, Seq(pk)) // A1 fail-fast gate
     val legacy = legacyDir(sfDir, entity)
     Sinks.doubleWrite(conformed, workDir(sfDir, s"$entity/raw"), legacy,
-      rawIncludesDayDt)
+      rawIncludesDayDt,
+      gate = Quality.requireUnique(_, Seq(pk))) // A1 fail-fast gate
     Canon.canonicalize(Sinks.readLegacyDay(spark, legacy, day))
   }
 

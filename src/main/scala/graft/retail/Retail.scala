@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.io.Tables
+import graft.io.{Artifacts, Fingerprint, Tables}
 
 /** Retail entity views over the driver's TPC-H-ish fixtures, following the
   * reference's post-normalization schemas (FIXTURES.md §A/§C).
@@ -75,15 +75,34 @@ object Retail {
 
   /** SALE_ID, CUSTOMER_ID, PRODUCT_ID, SUPPLIER_ID, SALE_DATE, QUANTITY,
     * DISCOUNT (percent 0–100), SHIPPING_COST, ORDER_STATUS, PAYMENT_MODE
-    * (reference ingestion_task.py:235–258). lineitem ⨝ orders on the order
-    * key — a fact-to-fact join, so both sides read from the bucketed
-    * sorted layout (graft.io.Bucketing): the join runs with no exchange
-    * and no sort, verified in BucketingSpec. The one-time bucketed write
-    * is amortized across every mart that consumes `sales`.
+    * (reference ingestion_task.py:235–258): lineitem ⨝ orders on the order
+    * key.
+    *
+    * The joined entity is ONE published artifact (`retail_sales` under
+    * [[Artifacts.root]]), built by the first call through
+    * [[Artifacts.getOrBuild]] and scanned by every later one — the way
+    * the reference's report tasks read one denormalized `raw.sales_pre`
+    * (SURVEY.md:343). Every consumer (the sales feed synthesis, the
+    * three marts, the micro queries and sketches) scans one small
+    * parquet dir instead of re-joining two fact tables per call. The
+    * dir is keyed on the fingerprints of BOTH inputs, so a changed
+    * lineitem or orders file builds a new artifact; `v1` names the
+    * projection below and must be bumped when it changes. The schema is
+    * read once per artifact and JVM, so a call plans no schema job.
     */
   def sales(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = graft.io.Bucketing.bucketed(spark, sfDir, "lineitem", "l_orderkey")
-    val o = graft.io.Bucketing.bucketed(spark, sfDir, "orders", "o_orderkey")
+    val dir = Artifacts.path("retail_sales", sfDir, "lineitem.parquet",
+      params = s"v1_${Fingerprint.ofPath(s"$sfDir/orders.parquet")}")
+    Artifacts.getOrBuild(dir)(salesJoin(spark, sfDir).write.parquet(_))
+    val schema = Artifacts.memoized("retail_sales", dir)(
+      spark.read.parquet(dir).schema)
+    spark.read.schema(schema).parquet(dir)
+  }
+
+  /** The entity [[sales]] publishes, joined from the fixture tables. */
+  private def salesJoin(spark: SparkSession, sfDir: String): DataFrame = {
+    val li = Tables.load(spark, sfDir, "lineitem")
+    val o = Tables.load(spark, sfDir, "orders")
     li.join(o, li("l_orderkey") === o("o_orderkey"), "inner")
       .select(
         (col("l_orderkey") * 10 + col("l_linenumber")).as("SALE_ID"),

@@ -10,7 +10,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.io.Sinks
+import graft.io.{Artifacts, Sinks}
 import graft.ops.Canon
 import graft.pipelines.{CustomerSalesReport, Ingestion, ProductPerformance,
   SupplierPerformance}
@@ -54,9 +54,10 @@ class RunnerDailySpec extends SparkSpec {
     spark.read.parquet(landed(task)).collect().map(_.toString).sorted.toSeq
 
   override def afterAll(): Unit = {
-    val tag = sf.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "")
-    Option(new File("target/bucketed").listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(s"_$tag")).foreach(FileUtils.deleteQuietly)
+    // the sales artifact Retail.sales built for this fixture copy
+    Option(new File(Artifacts.root, "retail_sales").listFiles()).toSeq
+      .flatten.filter(_.getName.startsWith(s"${Artifacts.tag(sf)}_"))
+      .foreach(FileUtils.deleteQuietly)
     FileUtils.deleteQuietly(new File("target/ingest", new File(sf).getName))
     FileUtils.deleteQuietly(new File(sf))
     super.afterAll()

@@ -22,6 +22,7 @@ class SessionSpec extends SparkSpec {
     assert(s.conf.get(
       "spark.sql.legacy.bucketedTableScan.outputOrdering") == "true")
     assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(s.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
     assert(s.sparkContext.getConf.get("spark.ui.enabled") == "false")
     assert(LogManager.getRootLogger.getLevel == Level.WARN)
   }

@@ -1,13 +1,9 @@
 package graft.ext
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, transform}
 
-import graft.SparkSpec
+import graft.{Listened, SparkSpec}
 
 /** The trainers' Lloyd round: hand-built frames with hand-derived
   * answers for the assignment order and the empty-cell rule, and the
@@ -81,41 +77,8 @@ class LloydRoundSpec extends SparkSpec {
       Seq((j, 0L, Seq(0.5)), (j, 1L, Seq(2.5)))).toSet)
   }
 
-  /** Jobs started by `body`, counted by a listener only. A marker job
-    * before and after `body` brackets its events: jobs of earlier work
-    * still queued on the listener bus are not counted, and once the
-    * closing marker is seen every job of `body` has been delivered.
-    */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.marker"
-    val (open, close) = (s"open-${System.nanoTime()}",
-      s"close-${System.nanoTime()}")
-    val closed = new CountDownLatch(1)
-    val jobs = new AtomicInteger
-    @volatile var counting = false
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty(key)).orNull match {
-          case `open` => counting = true
-          case `close` => counting = false; closed.countDown()
-          case _ => if (counting) jobs.incrementAndGet()
-        }
-    }
-    def marker(tag: String): Unit = {
-      sc.setLocalProperty(key, tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(key, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker(open)
-      body
-      marker(close)
-      assert(closed.await(60, TimeUnit.SECONDS), "listener bus stalled")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Jobs started by `body`, counted by a listener only. */
+  private def jobsOf(body: => Any): Int = Listened(spark)(body).jobs
 
   test("each Lloyd round is one job") {
     val e = VectorOps.embeddings(spark, sfDir)
@@ -162,12 +125,30 @@ class LloydRoundSpec extends SparkSpec {
     withRoot(root.getPath) {
       intercept[Exception](VectorOps.buildIvfPqIndex(spark, sfDir))
       assert(sc.getPersistentRDDs.keySet == before)
-      assert(sc.statusTracker.getActiveJobIds.isEmpty,
-        "an arm still runs after the build threw")
+      assert(activeJobs().isEmpty, "an arm still runs after the build threw")
       intercept[Exception](VectorOps.ivfIndex(spark, sfDir))
       assert(sc.getPersistentRDDs.keySet == before)
     }
     assert(root.isFile && root.length == 0)
+  }
+
+  /** The status tracker's active jobs, read once it has applied the end
+    * of every job that ended before this call. The tracker is fed by the
+    * listener bus, so a job the scheduler has ended can still read as
+    * active for a moment; a marker job's start is posted after those
+    * ends, and the tracker applies events in order.
+    */
+  private def activeJobs(): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"settle-${System.nanoTime()}"
+    sc.setJobGroup(group, "status tracker settle marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(group).isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    val marker = sc.statusTracker.getJobIdsForGroup(group).toSet
+    assert(marker.nonEmpty, "status tracker stalled")
+    sc.statusTracker.getActiveJobIds.toSeq.filterNot(marker)
   }
 
   /** Jobs a cold [[VectorOps.buildIvfPqIndex]] may start on the sf0.001
